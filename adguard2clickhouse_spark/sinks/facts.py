@@ -6,8 +6,8 @@ transaction log, so a crashed epoch retried by Structured Streaming
 could land the same block twice in ``log2`` while the additive
 aggregate sinks (epoch-id folds) and the ClickHouse insert (server
 dedup tokens) stayed effectively-once. This sink closes that gap with
-the stage-and-swap discipline the design doc named, mirroring
-``SummingParquetSink``'s ledger exactly:
+the stage-and-swap discipline the design doc named (the aggregate
+sinks, ``SummingParquetSink``, are this class plus a fold on read):
 
 1. **Stage**: the epoch's rows are written to a private
    ``.stage.<uuid>`` directory (partitioned + sorted like the final
@@ -26,9 +26,8 @@ the stage-and-swap discipline the design doc named, mirroring
    single visibility point. A crash between publish and commit leaves
    an uncommitted ``cseq=<seq>`` that the next append garbage-collects
    and overwrites; a retry of a COMMITTED epoch is a no-op (epoch
-   high-water mark + recent-epoch window, the same contract as
-   ``SummingParquetSink.applied`` — foreachBatch epochs are monotonic,
-   Spark replays at most the last epoch after a failure).
+   high-water mark + recent-epoch window — foreachBatch epochs are
+   monotonic, Spark replays at most the last epoch after a failure).
 
 ``read`` lists only committed directories, so readers never observe a
 torn epoch. Each committed directory carries the stream's
@@ -102,6 +101,12 @@ def _staged_stats(stage: str) -> tuple[int, int]:
 
 
 class LedgeredFactSink(FactSink):
+    # Ledger file names and the slot-directory partition column;
+    # subclasses that keep their own layout (sinks/summing.py) override.
+    _pointer_file = _POINTER
+    _lock_file = _LOCKFILE
+    _slot = "cseq"
+
     def __init__(
         self,
         path: str,
@@ -174,7 +179,7 @@ class LedgeredFactSink(FactSink):
         writer never wedges the table. NOT reentrant — public methods
         lock once and call unlocked internals."""
         fd = os.open(
-            os.path.join(self.path, _LOCKFILE),
+            os.path.join(self.path, self._lock_file),
             os.O_CREAT | os.O_RDWR,
             0o644,
         )
@@ -207,12 +212,12 @@ class LedgeredFactSink(FactSink):
         next append = silent total loss; mid-move resume =
         FileExistsError). Runs under the writer lock."""
         marker = os.path.join(self.path, _ADOPT_MARKER)
-        if os.path.exists(os.path.join(self.path, _POINTER)):
+        if os.path.exists(os.path.join(self.path, self._pointer_file)):
             if os.path.exists(marker):
                 os.remove(marker)  # crash after pointer, before cleanup
             return
         stage = os.path.join(self.path, _ADOPT_STAGE)
-        slot = os.path.join(self.path, "cseq=00000001")
+        slot = os.path.join(self.path, f"{self._slot}=00000001")
         # cseq=/stage entries without a pointer are NOT legacy data:
         # they are leftovers of a crash before the very first commit
         # (the epoch was never committed, Spark will replay it) — the
@@ -220,7 +225,7 @@ class LedgeredFactSink(FactSink):
         # duplicate the replayed epoch.
         legacy = [
             n for n in os.listdir(self.path)
-            if not n.startswith((".", "_", "cseq="))
+            if not n.startswith((".", "_", f"{self._slot}="))
         ]
         resuming = os.path.exists(marker)
         if not legacy and not resuming:
@@ -258,7 +263,7 @@ class LedgeredFactSink(FactSink):
             self._write_pointer(
                 {
                     "seq": 1,
-                    "dirs": ["cseq=00000001"],
+                    "dirs": [os.path.basename(slot)],
                     "epochs": [],
                     "epoch_hwm": None,
                     "tokens": [],
@@ -266,31 +271,23 @@ class LedgeredFactSink(FactSink):
             )
         os.remove(marker)
 
-    # -- pointer management (same shape as SummingParquetSink) --------------
+    # -- pointer management ---------------------------------------------------
     def _pointer(self) -> dict:
-        p = os.path.join(self.path, _POINTER)
-        if not os.path.exists(p):
-            return {
-                "seq": 0,
-                "dirs": [],
-                "epochs": [],
-                "epoch_hwm": None,
-                "tokens": [],
-                "stream_id": None,
-                "dir_bytes": {},
-                "generation": 0,
-                "trash": [],
-            }
-        with open(p) as f:
-            meta = json.load(f)
-        meta.setdefault("dirs", [])
-        meta.setdefault("epochs", [])
-        meta.setdefault("epoch_hwm", None)
-        meta.setdefault("tokens", [])
-        meta.setdefault("stream_id", None)
-        meta.setdefault("dir_bytes", {})
-        meta.setdefault("generation", 0)
-        meta.setdefault("trash", [])
+        meta = {
+            "seq": 0,
+            "dirs": [],
+            "epochs": [],
+            "epoch_hwm": None,
+            "tokens": [],
+            "stream_id": None,
+            "dir_bytes": {},
+            "generation": 0,
+            "trash": [],
+        }
+        p = os.path.join(self.path, self._pointer_file)
+        if os.path.exists(p):
+            with open(p) as f:
+                meta.update(json.load(f))
         return meta
 
     def _fsync_dir(self) -> None:
@@ -301,12 +298,14 @@ class LedgeredFactSink(FactSink):
             os.close(dfd)
 
     def _write_pointer(self, meta: dict) -> None:
-        tmp = os.path.join(self.path, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
+        tmp = os.path.join(
+            self.path, f".{self._pointer_file}.{uuid.uuid4().hex}.tmp"
+        )
         with open(tmp, "w") as f:
             json.dump(meta, f)
             f.flush()
             os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, _POINTER))  # atomic commit
+        os.replace(tmp, os.path.join(self.path, self._pointer_file))  # atomic commit
         # fsync the DIRECTORY too: the rename itself lives in the page
         # cache until the dirent is flushed, and Structured Streaming's
         # offset commit racing ahead of an unflushed ledger on power
@@ -357,11 +356,6 @@ class LedgeredFactSink(FactSink):
         ``_write_pointer`` (recording the bytes in ``dir_bytes`` so
         compaction tiering never re-stats committed slots). Callers
         hold the writer lock."""
-        if "cseq" in df.columns:
-            raise ValueError(
-                "LedgeredFactSink reserves the column name 'cseq' for "
-                "its commit-slot partition directories"
-            )
         stage, nbytes = self._stage(df)
         if stage is None:
             return None, 0
@@ -375,10 +369,10 @@ class LedgeredFactSink(FactSink):
         appends' orphan GC skips stages registered in
         ``_live_stages`` (maintenance staging runs OUTSIDE the lock so
         a multi-second fold write never blocks the epoch appends)."""
-        if "cseq" in df.columns:
+        if self._slot in df.columns:
             raise ValueError(
-                "LedgeredFactSink reserves the column name 'cseq' for "
-                "its commit-slot partition directories"
+                f"{type(self).__name__} reserves the column name "
+                f"{self._slot!r} for its commit-slot partition directories"
             )
         stage = os.path.join(self.path, f".stage.{uuid.uuid4().hex}")
         self._live_stages.add(os.path.basename(stage))
@@ -406,7 +400,7 @@ class LedgeredFactSink(FactSink):
         (one local-fs move). The slot is NOT yet visible: callers
         commit it via ``_write_pointer``. Callers hold the writer
         lock (seq allocation races otherwise)."""
-        dst = os.path.join(self.path, f"cseq={seq:08d}")
+        dst = os.path.join(self.path, f"{self._slot}={seq:08d}")
         if os.path.exists(dst):  # unreachable after _gc_orphans; belt
             shutil.rmtree(dst)
         os.replace(stage, dst)
@@ -428,10 +422,23 @@ class LedgeredFactSink(FactSink):
         return total
 
     def applied_token(self, token: str) -> bool:
-        """Out-of-band append idempotency (dead-letter replay): opaque
-        tokens in a 1000-entry window, separate from the monotonic
-        epoch ledger — same two-ledger contract (and the same window
-        caveat) as ``SummingParquetSink.applied_token``."""
+        """Out-of-band append idempotency (dead-letter replay): replay
+        and other maintenance writes identify by an opaque token
+        instead of an epoch id. Stream epoch ids are MONOTONIC and
+        ``applied`` treats everything ≤ hwm as committed, so an
+        out-of-band write must never touch epochs/epoch_hwm (a low id
+        would read as already-applied, a high one would make the sink
+        drop every future stream epoch).
+
+        Ledger window: tokens have no monotonic order, so there is no
+        hwm-style fallback — the ledger keeps only the most recent
+        ``_MAX_EPOCHS_TRACKED`` (1000) tokens. A replay retried after
+        ≥1000 SUBSEQUENT out-of-band writes would no longer be
+        recognized and would double. That window is an operational
+        contract: replays run while the stream is stopped and retries
+        happen immediately after a crash. If it ever stops holding,
+        raise ``_MAX_EPOCHS_TRACKED`` — the ledger is a pointer-file
+        list, cost is bytes, not IO."""
         return token in self._pointer()["tokens"]
 
     def _gc_orphans(self, meta: dict) -> None:
@@ -449,7 +456,9 @@ class LedgeredFactSink(FactSink):
             full = os.path.join(self.path, name)
             if not os.path.isdir(full):
                 # crashed pointer write: tmp pointers are junk forever
-                if name.startswith(f".{_POINTER}.") and name.endswith(".tmp"):
+                if name.startswith(f".{self._pointer_file}.") and name.endswith(
+                    ".tmp"
+                ):
                     try:
                         os.remove(full)
                     except OSError:
@@ -457,7 +466,7 @@ class LedgeredFactSink(FactSink):
                 continue
             if (
                 name.startswith(".stage.") and name not in self._live_stages
-            ) or (name.startswith("cseq=") and name not in committed):
+            ) or (name.startswith(f"{self._slot}=") and name not in committed):
                 shutil.rmtree(full, ignore_errors=True)
 
     def _swept_trash(self, meta: dict) -> tuple[list[dict], list[str]]:
@@ -559,7 +568,7 @@ class LedgeredFactSink(FactSink):
         reader = spark.read.option("basePath", self.path)
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths).drop("cseq")
+        return reader.parquet(*paths).drop(self._slot)
 
     def generation(self) -> int:
         """Content-generation counter: bumped ONLY by
@@ -681,7 +690,7 @@ class LedgeredFactSink(FactSink):
         # maxPartitionBytes — the file size reads want anyway).
         target = small_bytes or (128 << 20)
         n_out = max(1, -(-in_bytes // target))
-        merged = reader.parquet(*paths).drop("cseq").coalesce(n_out)
+        merged = self._merge(reader.parquet(*paths).drop(self._slot)).coalesce(n_out)
         stage, nbytes = self._stage(merged)
 
         with self._locked():
@@ -721,6 +730,12 @@ class LedgeredFactSink(FactSink):
         for d in expired:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         return len(small)
+
+    def _merge(self, df: DataFrame) -> DataFrame:
+        """How a compaction combines the rows of the slots it folds:
+        facts are kept as they are (a fold only rewrites files);
+        ``SummingParquetSink`` folds equal keys."""
+        return df
 
     def _select_fold(
         self,

@@ -1,38 +1,35 @@
 """Additive "summing" sink — the SummingMergeTree contract natively.
 
 In the reference, every insert block triggers the MVs to emit delta
-rows into SummingMergeTree tables, and background merges fold rows
-with equal ORDER BY keys by summing the numeric columns
-(/root/reference/README.md:25-41 et al., SURVEY.md §2.8 C1/C2). This
+rows into SummingMergeTree tables (/root/reference/README.md:24-189,
+SURVEY.md §2.8 C1/C2). There an INSERT only appends an immutable part,
+background merges fold rows with equal ORDER BY keys, and a SELECT
+re-aggregates because parts not yet merged can hold the same key. This
 sink is that contract on Parquet:
 
-    apply_delta(delta_df, epoch_id):  state' = (state ∪ delta) ⊕ keys
+- ``apply_delta(delta, epoch_id)`` stages the epoch's delta as one
+  immutable part and commits it under the epoch/token ledger: one Spark
+  write job, O(delta). Existing parts are never read, rewritten or
+  deleted by an epoch.
+- ``read(spark)`` returns ``groupBy(keys).agg(folds)`` over the
+  committed parts.
+- ``compact(...)`` folds parts in the background, size-tiered like the
+  fact ledger's compaction, applying the same fold to the merged parts
+  (the pipeline runs it on its maintenance thread).
 
-with ⊕ = groupBy(keys).sum(measures). Correct because every reference
-aggregate is a sum/count (order-insensitive, associative) — verified
-by tests/test_aggregates.py::test_additivity_invariant.
+Folding on read is exact because every fold (sum, max, min, hll_union)
+is associative and commutative: any grouping of the parts folds to the
+same state, so a read sees the same rows before and after a
+compaction. Verified for sums by
+tests/test_aggregates.py::test_additivity_invariant.
 
-**Bucketed state (scale).** State lives in ``n_buckets`` hash buckets
-(``pmod(xxhash64(keys), n)``), each its own versioned parquet
-directory. A micro-batch merge reads and rewrites ONLY the buckets its
-delta touches; the other buckets' files are not opened, not rewritten,
-byte-identical afterwards. With a high-cardinality key (per-client
-per-10-min ``stats2`` over years) that turns the per-epoch cost from
-O(total state) into O(state touched by the batch) — the same reason
-ClickHouse folds per-part instead of rewriting the table. Bucket
-count is fixed at table creation (like a Kafka partition count or
-ClickHouse's bucket-by-key sharding): re-bucketing = ``replace()``
-with a new sink.
-
-**Exactly-once.** The table directory keeps a pointer file (atomic
-``os.replace``) naming the current version of every bucket, the
-recently-applied epoch ids, and an epoch **high-water mark**. A
-foreachBatch retry with a seen epoch is a no-op; epochs older than
-the tracked window are caught by the high-water mark (foreachBatch
-epochs are monotonically increasing — Spark replays at most the last
-epoch after a failure, never reorders), so idempotency survives
-arbitrarily long streams. Visibility is all-or-nothing: merged bucket
-versions become live only at the single pointer swap.
+Everything else is ``LedgeredFactSink`` (sinks/facts.py): staged,
+epoch-idempotent appends with a high-water mark, the separate token
+ledger for out-of-band folds (dead-letter replay), stream-identity
+scoping, the flock writer lock, and compaction that stages outside the
+lock and retires folded parts into a trash list so readers still
+scanning them finish. Parts live in ``block=<seq>`` directories;
+``CURRENT.json`` is the pointer, with ``version`` counting commits.
 
 At 100 TB the same interface backs Delta MERGE or a real ClickHouse
 SummingMergeTree where the fold is native (sinks/clickhouse.py).
@@ -40,25 +37,20 @@ SummingMergeTree where the fold is native (sinks/clickhouse.py).
 
 from __future__ import annotations
 
-import json
 import os
+import re
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_POINTER = "CURRENT.json"
-_MAX_EPOCHS_TRACKED = 1000
-_BUCKET = "_sps_bucket"
-
+from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink, _staged_stats
 
 # Per-measure fold functions. "sum" is SummingMergeTree; the rest make
 # this sink the AggregatingMergeTree analog: any fold that is
-# commutative, associative, and idempotent-mergeable keeps the
-# (state ∪ delta) ⊕ keys contract exact. "hll_union" folds Spark's
-# native DataSketches HLL binary sketches — registers are identical
-# whether built whole or merged from partials, so streaming
+# commutative and associative keeps fold-on-read exact. "hll_union"
+# folds Spark's native DataSketches HLL binary sketches — registers are
+# identical whether built whole or merged from partials, so streaming
 # count-distinct state stays exactly consistent with a batch sketch.
 _FOLDS = {
     "sum": F.sum,
@@ -67,269 +59,109 @@ _FOLDS = {
     "hll_union": lambda c: F.hll_union_agg(c, F.lit(False)),
 }
 
+# CURRENT.json keeps the key names of the bucketed layout it replaced
+# for the commit counter and the token ledger: {ledger key: file key}.
+_FILE_KEYS = {"seq": "version", "tokens": "replay_tokens"}
+_BUCKET_DIR = re.compile(r"b\d{4}")
 
-class SummingParquetSink:
+
+class SummingParquetSink(LedgeredFactSink):
+    _pointer_file = "CURRENT.json"
+    _lock_file = "CURRENT.lock"
+    _slot = "block"
+
     def __init__(
         self,
         path: str,
         keys: list[str],
         measures: list[str],
-        n_buckets: int = 8,
         folds: dict[str, str] | None = None,
     ):
         """``folds``: optional measure→fold-name map ({"sum", "max",
         "min", "hll_union"}); unlisted measures fold with "sum" — the
-        default SummingMergeTree behavior, so existing sinks are
-        unchanged."""
-        self.path = path
-        self.keys = keys
-        self.measures = measures
-        self.n_buckets = n_buckets
+        default SummingMergeTree behavior."""
+        self.keys = list(keys)
+        self.measures = list(measures)
         self.folds = dict(folds or {})
         for m, f in self.folds.items():
             if f not in _FOLDS:
                 raise ValueError(f"unknown fold {f!r} for measure {m!r}")
-        # Observation from the most recent SPARSE fold's touched-bucket
-        # discovery: did that delta touch every bucket? None until a
-        # sparse fold has run. The pipeline's dense_folds="auto" gate
-        # reads this (ADVICE r7: gating on raw epoch rows alone lets a
-        # 100k-row single-hot-key epoch pick dense and rewrite every
-        # bucket — bucket coverage depends on the delta's DISTINCT-KEY
-        # count, which only the discovery job actually measures).
-        self.last_fold_touched_all: bool | None = None
-        os.makedirs(path, exist_ok=True)
+        super().__init__(path)
 
-    def _fold_exprs(self):
-        return [
-            _FOLDS[self.folds.get(m, "sum")](m).alias(m) for m in self.measures
-        ]
+    def _merge(self, df: DataFrame) -> DataFrame:
+        return df.groupBy(*self.keys).agg(
+            *[_FOLDS[self.folds.get(m, "sum")](m).alias(m) for m in self.measures]
+        )
 
-    # -- pointer management -------------------------------------------------
+    # -- pointer file --------------------------------------------------------
     def _pointer(self) -> dict:
-        p = os.path.join(self.path, _POINTER)
-        if not os.path.exists(p):
-            return {
-                "version": 0,
-                "buckets": {},
-                "epochs": [],
-                "epoch_hwm": None,
-                "replay_tokens": [],
-            }
-        with open(p) as f:
-            meta = json.load(f)
-        meta.setdefault("buckets", {})
-        meta.setdefault("epochs", [])
-        meta.setdefault("epoch_hwm", None)
-        meta.setdefault("replay_tokens", [])
+        meta = super()._pointer()
+        for key, file_key in _FILE_KEYS.items():
+            meta[key] = meta.setdefault(file_key, meta[key])
         return meta
 
     def _write_pointer(self, meta: dict) -> None:
-        tmp = os.path.join(self.path, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(self.path, _POINTER))  # atomic
+        out = dict(meta)
+        for key, file_key in _FILE_KEYS.items():
+            out[file_key] = out.pop(key)
+        super()._write_pointer(out)
 
-    def _bucket_dir(self, bucket: int, version: int) -> str:
-        return os.path.join(self.path, f"b{bucket:04d}", f"v{version:08d}")
-
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        # xxhash64 treats NULL keys deterministically; pmod keeps the
-        # id in [0, n). Same expression on every path, so a key always
-        # lands in the same bucket.
-        return df.withColumn(
-            _BUCKET,
-            F.pmod(F.xxhash64(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets)),
-        )
+    def _adopt_legacy(self) -> None:
+        """One-time migration of the bucketed layout, whose
+        ``CURRENT.json`` named one ``b<bucket>/v<version>`` directory
+        per hash bucket: the live bucket files move into one committed
+        part (renames only, no data rewrite) and the epoch/token
+        ledgers carry over. Each bucket held distinct keys, so the part
+        is already folded. Resumable without a marker: until the new
+        pointer commits, the old one still names the buckets, and a
+        rerun moves whatever files a crashed run left behind. Runs
+        under the writer lock."""
+        meta = self._pointer()
+        buckets = meta.pop("buckets", None)
+        if buckets is None:
+            return
+        meta["seq"] += 1
+        name = f"{self._slot}={meta['seq']:08d}"
+        slot = os.path.join(self.path, name)
+        os.makedirs(slot, exist_ok=True)
+        for b, v in buckets.items():
+            src = os.path.join(self.path, f"b{int(b):04d}", f"v{v:08d}")
+            if not os.path.isdir(src):
+                continue
+            for f in os.listdir(src):
+                if not f.startswith((".", "_")):
+                    os.replace(
+                        os.path.join(src, f),
+                        os.path.join(slot, f"b{int(b):04d}-{f}"),
+                    )
+        rows, nbytes = _staged_stats(slot)
+        if rows:
+            meta["dirs"], meta["dir_bytes"] = [name], {name: nbytes}
+        else:
+            shutil.rmtree(slot)
+        self._write_pointer(meta)
+        for d in os.listdir(self.path):
+            if _BUCKET_DIR.fullmatch(d):
+                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
     # -- public API ----------------------------------------------------------
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        meta = self._pointer()
-        if not meta["buckets"]:
-            return None
-        paths = [
-            self._bucket_dir(int(b), v) for b, v in sorted(meta["buckets"].items())
-        ]
-        return spark.read.parquet(*paths)
-
-    def applied(self, epoch_id: int) -> bool:
-        meta = self._pointer()
-        hwm = meta["epoch_hwm"]
-        return epoch_id in meta["epochs"] or (hwm is not None and epoch_id <= hwm)
-
-    def applied_token(self, token: str) -> bool:
-        """Out-of-band (non-stream) delta idempotency: replay and other
-        maintenance folds identify by an opaque token instead of an
-        epoch id — stream epoch ids are MONOTONIC and ``applied`` treats
-        everything ≤ hwm as folded, so an out-of-band fold must never
-        touch epochs/epoch_hwm (a low id would read as already-applied,
-        a high one would make the sink drop every future stream epoch).
-
-        Ledger window: unlike epochs, tokens have no monotonic order, so
-        there is no hwm-style fallback — the ledger keeps only the most
-        recent ``_MAX_EPOCHS_TRACKED`` (1000) tokens. A replay retried
-        after ≥1000 SUBSEQUENT out-of-band folds would no longer be
-        recognized and would double-fold. That window is an operational
-        contract, not a latent bug: replays run while the stream is
-        stopped and retries happen immediately after a crash, so a
-        thousand interleaved maintenance folds before the retry is not
-        a real schedule. If it ever becomes one, raise
-        ``_MAX_EPOCHS_TRACKED`` — the ledger is a pointer-file list,
-        cost is bytes, not IO.
-        """
-        return token in self._pointer()["replay_tokens"]
-
-    def _install(
-        self,
-        frame: DataFrame,
-        touched: list[int],
-        meta: dict,
-        epoch_id: int | None,
-        token: str | None = None,
-    ) -> None:
-        """Write ``frame`` (already bucket-tagged, already folded) as the
-        next version of the ``touched`` buckets and swap the pointer."""
-        new_version = meta["version"] + 1
-        stage = os.path.join(self.path, f".stage.v{new_version:08d}.{uuid.uuid4().hex}")
-        # One Spark job for all touched buckets: partitionBy splits the
-        # staged write into _sps_bucket=K directories (the column itself
-        # is not stored in the files), then each directory is renamed
-        # into its bucket's version slot — a local fs move, no second job.
-        frame.write.mode("overwrite").partitionBy(_BUCKET).parquet(stage)
-
-        buckets = dict(meta["buckets"])
-        old_dirs = []
-        for b in touched:
-            src = os.path.join(stage, f"{_BUCKET}={b}")
-            dst = self._bucket_dir(b, new_version)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if not os.path.exists(src):
-                # delta folded to an empty bucket (possible only via
-                # replace() shrinking state): drop the bucket entirely.
-                if str(b) in buckets:
-                    old_dirs.append(self._bucket_dir(b, buckets.pop(str(b))))
-                continue
-            os.replace(src, dst)
-            prev = buckets.get(str(b))
-            if prev is not None:
-                old_dirs.append(self._bucket_dir(b, prev))
-            buckets[str(b)] = new_version
-
-        epochs = meta["epochs"]
-        hwm = meta["epoch_hwm"]
-        if epoch_id is not None:
-            epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
-            hwm = epoch_id if hwm is None else max(hwm, epoch_id)
-        tokens = meta["replay_tokens"]
-        if token is not None:
-            tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
-        self._write_pointer(
-            {
-                "version": new_version,
-                "buckets": buckets,
-                "epochs": epochs,
-                "epoch_hwm": hwm,
-                "replay_tokens": tokens,
-            }
-        )
-        # post-swap cleanup: superseded bucket versions + stage leftovers
-        for d in old_dirs:
-            shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
-    def replace(self, full: DataFrame) -> None:
-        """Swap in a wholesale recomputation (backfill/repair): rewrite
-        every bucket as the next version and point at it atomically. The
-        applied-epoch history is preserved so a concurrent stream's
-        retried epoch is still recognized as folded-in."""
-        meta = self._pointer()
-        tagged = self._with_bucket(full)
-        self._install(tagged, list(range(self.n_buckets)), meta, epoch_id=None)
+    def read(
+        self, spark: SparkSession, merge_schema: bool = False
+    ) -> DataFrame | None:
+        """The folded table: ``groupBy(keys).agg(folds)`` over every
+        committed part; None before the first commit."""
+        parts = super().read(spark, merge_schema)
+        return None if parts is None else self._merge(parts)
 
     def apply_delta(
         self,
         delta: DataFrame,
         epoch_id: int | None = None,
         token: str | None = None,
-        dense: bool = False,
     ) -> None:
-        """Fold a delta frame into the table (idempotent per epoch_id
-        for stream epochs, per ``token`` for out-of-band folds like
-        dead-letter replay — see ``applied_token`` for why those two
-        must be separate ledgers), rewriting only the hash buckets the
-        delta touches.
-
-        ``dense=True`` skips the touched-bucket discovery job and folds
-        the delta into EVERY bucket in one Spark job. Measured r6 on
-        the streaming fan: a micro-batch's keyed delta (thousands of
-        keys into 8 buckets) touches all buckets essentially every
-        epoch, so the discovery job (delta aggregation + distinct +
-        driver collect, per sink per epoch) only ever discovered "all
-        of them" — pure overhead on the hot path. The sparse path
-        remains the default for out-of-band folds (dead-letter replay:
-        a 100-line delta touches few buckets of a huge table, and the
-        discovery job is what keeps untouched buckets byte-identical)."""
-        meta = self._pointer()
-        if epoch_id is not None and self.applied(epoch_id):
-            return  # retry of an applied epoch — exactly-once no-op
-        if token is not None and token in meta["replay_tokens"]:
-            return  # retry of an applied out-of-band fold — no-op
-
-        spark = delta.sparkSession
-        if dense:
-            tagged = self._with_bucket(delta)
-            current_paths = [
-                self._bucket_dir(int(b), v) for b, v in meta["buckets"].items()
-            ]
-            if current_paths:
-                current = self._with_bucket(spark.read.parquet(*current_paths))
-                unioned = current.unionByName(tagged)
-            else:
-                unioned = tagged
-            merged = unioned.groupBy(_BUCKET, *self.keys).agg(*self._fold_exprs())
-            # every bucket may change; _install no-ops buckets with no
-            # staged output (and additive folds cannot empty a bucket)
-            self._install(
-                merged, list(range(self.n_buckets)), meta, epoch_id, token=token
-            )
-            return
-        tagged = self._with_bucket(delta).persist()
-        try:
-            # Touched-bucket discovery: a ≤ n_buckets-row collect (n is
-            # a table constant, not data-sized) — this is exactly what
-            # makes the other buckets' files never open.
-            touched = sorted(
-                r[0] for r in tagged.select(_BUCKET).distinct().collect()
-            )
-            self.last_fold_touched_all = len(touched) == self.n_buckets
-            if not touched:
-                # empty delta: still record the epoch/token for idempotency
-                if epoch_id is not None or token is not None:
-                    epochs, hwm = meta["epochs"], meta["epoch_hwm"]
-                    if epoch_id is not None:
-                        epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
-                        hwm = epoch_id if hwm is None else max(hwm, epoch_id)
-                    tokens = meta["replay_tokens"]
-                    if token is not None:
-                        tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
-                    self._write_pointer(
-                        {**meta, "epochs": epochs, "epoch_hwm": hwm,
-                         "replay_tokens": tokens}
-                    )
-                return
-
-            current_paths = [
-                self._bucket_dir(int(b), meta["buckets"][str(b)])
-                for b in touched
-                if str(b) in meta["buckets"]
-            ]
-            if current_paths:
-                current = self._with_bucket(spark.read.parquet(*current_paths))
-                unioned = current.unionByName(tagged)
-            else:
-                unioned = tagged
-            merged = unioned.groupBy(_BUCKET, *self.keys).agg(*self._fold_exprs())
-            self._install(merged, touched, meta, epoch_id, token=token)
-        finally:
-            tagged.unpersist()
+        """Append ``delta`` as one part: idempotent per ``epoch_id``
+        for stream epochs and per ``token`` for out-of-band folds like
+        dead-letter replay (see ``applied_token`` for why those are two
+        ledgers). An empty delta commits no part but still records its
+        epoch/token."""
+        self.append(delta, epoch_id=epoch_id, token=token)

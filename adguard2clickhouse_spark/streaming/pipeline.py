@@ -11,13 +11,14 @@ Reference architecture being re-expressed:
 Spark-first shape: ONE streaming query. Each micro-batch is the
 "insert block"; inside foreachBatch the batch is persisted once and
 fanned out to the fact append plus the eight aggregate deltas, each
-additively folded into its summing sink — exactly the MV + Summing-
-MergeTree contract, with no unbounded executor state (no state store),
-which is what survives 100 TB: aggregation state lives in the sink,
-keyed and compact, while Spark only ever holds one micro-batch.
+appended as one part to its summing sink, which folds parts on read
+and in background compaction — exactly the MV + SummingMergeTree
+contract, with no unbounded executor state (no state store), which is
+what survives 100 TB: aggregation state lives in the sink, keyed and
+compact, while Spark only ever holds one micro-batch.
 
 Delivery: checkpointed source offsets + epoch-id-idempotent aggregate
-upserts = exactly-once for aggregates, and (r10) exactly-once for the
+appends = exactly-once for aggregates, and (r10) exactly-once for the
 log2 fact append AND the dead-letter append too — each epoch's rows
 go through a staged commit ledger (sinks/facts.py), so a
 crashed-and-replayed epoch can no longer double fact rows (nor double
@@ -33,6 +34,7 @@ key, not window state.
 from __future__ import annotations
 
 import os
+import re
 import time as _time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -74,7 +76,6 @@ class QuerylogPipeline:
                  checkpoint_dir: str | None = None, clickhouse=None,
                  custom_aggregates=None,
                  parse_parallelism: int | str | None = None,
-                 dense_folds: bool | str = "auto",
                  fused_deltas: bool | str = "auto",
                  fact_sink_factory=None):
         self.spark = spark
@@ -153,19 +154,6 @@ class QuerylogPipeline:
         if parse_parallelism == "auto":
             parse_parallelism = spark.sparkContext.defaultParallelism
         self.parse_parallelism = parse_parallelism or None
-        # Per-sink fold strategy (ADVICE r6: r6 hardwired dense=True,
-        # trading away the sink's documented O(touched-state) property
-        # for every future caller). "auto" (default) decides PER EPOCH
-        # PER SINK from data already on hand — the batch row count the
-        # cache materialization produces anyway: a delta with
-        # rows ≥ 4·n_buckets touches every bucket with near certainty
-        # under the xxhash64 bucketing (P[missed bucket] ≤
-        # n·e^(−rows/n) < 2% at 4×), so the discovery job can only
-        # rediscover "all of them" — skip it. Below that, low-traffic
-        # epochs and high-n_buckets sinks keep the sparse bucket-pruned
-        # path that leaves untouched buckets byte-identical. True/False
-        # pin the strategy for every sink.
-        self.dense_folds = dense_folds
         # Fused grouping-sets delta computation (see process_batch).
         # "auto" (default) decides PER EPOCH from the batch row count:
         # same-day A/B pairs at 1M rows (r9) put the crossover between
@@ -176,29 +164,15 @@ class QuerylogPipeline:
         # get scan/delta-compute-bound before one grouping-sets pass
         # does). True/False pin the strategy; the fused plan itself is
         # driver-gated via a16_fused_mv_union.
-        # Strategy knobs accept bool | "auto" ONLY. Any other string
+        # The strategy knob accepts bool | "auto" ONLY. Any other string
         # ("false", "off", a typo like "Auto") must be an error, not a
         # silent bool(str)=True behavior change (ADVICE r9).
-        for knob, val in (("dense_folds", dense_folds),
-                          ("fused_deltas", fused_deltas)):
-            if isinstance(val, str) and val != "auto":
-                raise ValueError(
-                    f"{knob} must be True, False or 'auto'; got {val!r}"
-                )
+        if isinstance(fused_deltas, str) and fused_deltas != "auto":
+            raise ValueError(
+                f"fused_deltas must be True, False or 'auto'; got {fused_deltas!r}"
+            )
         self.fused_deltas = fused_deltas
         self.fused_min_rows = 200_000
-        # Dense-regime re-probe cadence (r10, closing the documented
-        # dense-state blindness): a sink that flipped dense never
-        # measures bucket coverage again, so a traffic shift to
-        # hot-key deltas went unobserved — costing rewritten-but-
-        # identical buckets every epoch until restart. Every Nth
-        # consecutive dense fold per sink now runs ONE sparse fold
-        # whose discovery job re-measures coverage for free: steady
-        # keyed traffic pays one discovery per N epochs (~6% at the
-        # default), a shifted sink flips back to sparse within N
-        # epochs and stays there. 0/None disables the re-probe.
-        self.sparse_reprobe_every = 16
-        self._dense_streaks: dict[int, int] = {}
         # Automatic fact-ledger maintenance (VERDICT r10 #1): reads
         # degrade with committed-slot count (BENCH_factledger_r10.json:
         # 17 s at 200 tiny slots vs 6.6 s after one compaction), and a
@@ -225,7 +199,9 @@ class QuerylogPipeline:
         # auto_compact_min_slots stays as the BACKSTOP: if the slot
         # count ever reaches it despite tiering (pathological size
         # distributions, fanout disabled), the full small fold runs as
-        # before.
+        # before. The summing sinks take the same tiered step: each
+        # epoch appends one part per sink, and a fold merges k parts
+        # into one, folding equal keys (SummingParquetSink.compact).
         self.auto_compact_min_slots: int | None = 48
         self.auto_compact_fanout: int | None = 8
         self.compact_small_bytes = 128 << 20
@@ -243,8 +219,8 @@ class QuerylogPipeline:
             max_workers=1, thread_name_prefix="ledger-maint"
         )
         self._maint_future = None
-        # Streaming-query identity for the fact/dead-letter epoch
-        # ledgers (ADVICE r10): resolved lazily from the checkpoint's
+        # Streaming-query identity for every sink's epoch ledger
+        # (ADVICE r10): resolved lazily from the checkpoint's
         # metadata file (Spark writes it at query init, before the
         # first batch) and handed to the sinks, so a deleted/relocated
         # checkpoint — epoch ids restarting at 0 — voids the stale
@@ -254,14 +230,11 @@ class QuerylogPipeline:
         # per-epoch stage walls appended by process_batch (see there)
         self.batch_timings: list[dict] = []
         # Operator sizing hint (r13, VERDICT r12 #5): the per-epoch
-        # fixed cost (~2.3 s — parse materialization + the 8-sink fold
-        # fan's job floor, BENCH_small_epoch_r13.json) makes small
-        # epochs overhead-bound: measured 21.5k rows/s normalized at
-        # 50k rows/epoch vs 98.2k at 500k. When a RUNNING stream has
-        # processed `sizing_hint_epochs` epochs whose median rows sit
-        # under `sizing_hint_rows`, emit ONE warning with the measured
-        # rule — the README table for users who never read it. 0/None
-        # disables.
+        # fixed cost (see ``start``) makes small epochs overhead-bound.
+        # When a RUNNING stream has processed `sizing_hint_epochs`
+        # epochs whose median rows sit under `sizing_hint_rows`, emit
+        # ONE warning with the measured rule — the README table for
+        # users who never read it. 0/None disables.
         self.sizing_hint_rows = 100_000
         self.sizing_hint_epochs = 10
         self.sizing_hint: str | None = None
@@ -279,9 +252,13 @@ class QuerylogPipeline:
 
     def _maintenance_step(self) -> dict:
         """One incremental size-tiered fold step per ledgered channel
-        (see ``auto_compact_fanout`` in ``__init__``). Runs on the
-        maintenance thread; returns the walls to merge into the
-        collecting batch's timings. The dead-letter channel joins the
+        and per summing sink (see ``auto_compact_fanout`` in
+        ``__init__``), the channels folding concurrently so a step
+        lasts as long as its slowest fold, not the sum of ten. Runs on
+        the maintenance thread; returns the walls to merge into the
+        collecting batch's timings (the summing sinks' under
+        ``summing_compact_*``: the slowest sink's wall and the parts
+        folded over all sinks). The dead-letter channel joins the
         maintenance (VERDICT r11 #3): safe now that the replay token
         is a CONTENT digest of the committed dead lines (order/layout-
         independent, see ``_dead_letter_digest``) — a fold between a
@@ -289,20 +266,28 @@ class QuerylogPipeline:
         hence the token, hence idempotence. Only a persistently-noisy
         source ever gives the dead fold work (clean epochs publish
         nothing to the dead channel)."""
-        out: dict = {}
-        for key, sink in (
+        channels = [
             ("auto_compact", self.log2_sink),
             ("dead_compact", self.dead_sink),
-        ):
+            *(("summing_compact", s) for s in self.sinks.values()),
+        ]
+
+        def fold(sink):
             t0 = _time.time()
             folded = sink.compact(
                 self.spark,
                 small_bytes=self.compact_small_bytes,
                 max_fold_slots=self.auto_compact_fanout,
             )
+            return folded, _time.time() - t0
+
+        with ThreadPoolExecutor(max_workers=len(channels)) as pool:
+            results = list(pool.map(fold, [sink for _, sink in channels]))
+        out: dict = {}
+        for (key, _), (folded, wall) in zip(channels, results):
             if folded:
-                out[f"{key}_s"] = round(_time.time() - t0, 3)
-                out[f"{key}_folded"] = folded
+                out[f"{key}_s"] = round(max(out.get(f"{key}_s", 0), wall), 3)
+                out[f"{key}_folded"] = out.get(f"{key}_folded", 0) + folded
         return out
 
     def join_maintenance(self) -> dict:
@@ -333,47 +318,6 @@ class QuerylogPipeline:
             )
         self.join_maintenance()
 
-    def _dense_fold(self, sink: SummingParquetSink, n_rows: int) -> bool:
-        """Per-epoch per-sink fold strategy (see ``dense_folds`` in
-        ``__init__``): dense when the strategy is pinned True, sparse
-        when pinned False. "auto" needs TWO signals (ADVICE r7: the
-        raw row count alone is the wrong quantity — bucket coverage
-        depends on the delta's distinct-KEY count, so a 100k-row epoch
-        on one hot key would pick dense and rewrite every bucket,
-        defeating the O(touched-state) property): (1) rows ≥
-        4·n_buckets makes full coverage plausible, and (2) the sink's
-        LAST sparse discovery actually observed a delta touching every
-        bucket (``last_fold_touched_all``, measured for free by the
-        discovery job). The first epoch therefore always runs sparse —
-        one discovery job at startup buys the measurement; steady-state
-        keyed traffic flips to dense on epoch 2, while hot-key traffic
-        stays sparse for good. A traffic shift while dense would go
-        unobserved (dense never measures), so every
-        ``sparse_reprobe_every``-th consecutive dense fold runs sparse
-        to re-measure coverage (r10) — a shifted sink returns to the
-        O(touched-state) path within one cadence instead of never."""
-        if self.dense_folds == "auto":
-            dense = (
-                n_rows >= 4 * sink.n_buckets
-                and sink.last_fold_touched_all is True
-            )
-            key = id(sink)
-            if not dense:
-                self._dense_streaks[key] = 0
-                return False
-            streak = self._dense_streaks.get(key, 0) + 1
-            if (
-                self.sparse_reprobe_every
-                and streak >= self.sparse_reprobe_every
-            ):
-                # periodic re-probe: one sparse fold re-measures
-                # last_fold_touched_all via its discovery job
-                self._dense_streaks[key] = 0
-                return False
-            self._dense_streaks[key] = streak
-            return True
-        return bool(self.dense_folds)
-
     # -- the per-micro-batch body (the reference's "insert block") ----------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         import time as _time
@@ -394,12 +338,12 @@ class QuerylogPipeline:
 
             return run
 
-        # Scope the fact/dead-letter epoch ledgers to this streaming
-        # query's identity (see __init__) before any append this epoch.
+        # Scope every sink's epoch ledger to this streaming query's
+        # identity (see __init__) before any append this epoch.
         sid = self._resolve_stream_identity()
         if sid is not None:
-            self.log2_sink.stream_id = sid
-            self.dead_sink.stream_id = sid
+            for sink in (self.log2_sink, self.dead_sink, *self.sinks.values()):
+                sink.stream_id = sid
 
         batch_df.persist()
         try:
@@ -440,7 +384,7 @@ class QuerylogPipeline:
 
             # Delivery contract (r10, closing VERDICT r9 ask #1): every
             # consumer of this epoch is now idempotent — the summing
-            # sinks fold by epoch_id, the fact and dead-letter appends
+            # sinks append by epoch_id, the fact and dead-letter appends
             # commit through staged epoch ledgers (sinks/facts.py), and
             # the ClickHouse insert passes a deterministic
             # insert_deduplication_token per (epoch, partition) so the
@@ -457,9 +401,9 @@ class QuerylogPipeline:
             # Delta computation: per-sink groupBys vs ONE fused
             # grouping-sets pass (fused_aggregate_deltas, VERDICT r6
             # #4), decided per epoch under "auto" (see __init__ for
-            # the measured crossover). Small epochs are fan
-            # merge+write-bound — the fused job only adds a serial
-            # stage; large epochs are delta-compute-bound — eight full
+            # the measured crossover). Small epochs are bound by the
+            # per-job floor — the fused job only adds a serial stage;
+            # large epochs are delta-compute-bound — eight full
             # re-scans of the cached batch cost more than one
             # grouping-sets pass. The fused plan applies only to the
             # stock aggregate set (custom MVs have no extractor).
@@ -477,27 +421,26 @@ class QuerylogPipeline:
                 fused, extract = fused_aggregate_deltas(good)
                 fused.persist().count()
                 t = _mark("fused_delta_s", t)
-                deltas = {
-                    name: extract[name](fused) for name in self.aggregates
-                }
+
+                def delta_of(name):
+                    return extract[name](fused)
             else:
-                deltas = {
-                    name: fn(good) for name, fn in self.aggregates.items()
-                }
+                def delta_of(name):
+                    return self.aggregates[name](good)
 
             # ONE overlapped section: fact append, dead-letter append,
-            # ClickHouse POSTs and the 8 additive sink folds are
-            # independent consumers of the materialized caches, so they
-            # run as concurrent Spark jobs (r7, VERDICT r6 #4): the
-            # epoch wall becomes parse + max(consumer) instead of
-            # parse + Σ(consumers). Each consumer is still timed
-            # individually; `overlap_section_s` records the section's
-            # real elapsed wall (the critical path, normally the fan).
+            # ClickHouse POSTs and the 8 sink appends are independent
+            # consumers of the materialized caches, so they run as
+            # concurrent Spark jobs (r7, VERDICT r6 #4): the epoch wall
+            # becomes parse + max(consumer) instead of parse +
+            # Σ(consumers). Each sink's delta plan is built inside its
+            # own task, so the eight driver-side plan builds overlap
+            # each other and the fact append. Each consumer is still
+            # timed individually; `overlap_section_s` records the
+            # section's real elapsed wall.
             def _fold(name):
                 return lambda: self.sinks[name].apply_delta(
-                    deltas[name],
-                    epoch_id,
-                    dense=self._dense_fold(self.sinks[name], n_good),
+                    delta_of(name), epoch_id
                 )
 
             consumers = [
@@ -598,10 +541,10 @@ class QuerylogPipeline:
         self.sizing_hint = (
             f"SMALL-EPOCH REGIME: the last {self.sizing_hint_epochs} "
             f"micro-batches carried a median of {int(med):,} rows. The "
-            "per-epoch fixed cost (~2.3 s: parse materialization + the "
-            "8-sink fold fan's job floor) makes this overhead-bound - "
-            "measured 21.5k rows/s at 50k rows/epoch vs 98.2k at 500k "
-            "(BENCH_small_epoch_r13.json). Raise maxFilesPerTrigger / "
+            "per-epoch fixed cost (about 2 s for a 3k-row epoch on a "
+            "4-core host: parse materialization plus the job floor of "
+            "the fact append and the eight sink appends) makes this "
+            "overhead-bound. Raise maxFilesPerTrigger / "
             "file sizes so epochs carry >=250k rows (target ~500k); "
             "small epochs buy latency, not throughput."
         )
@@ -627,8 +570,11 @@ class QuerylogPipeline:
         ``max_files_per_trigger`` is the lever when the spooler writes
         fixed-size files (pick ceil(500k / rows-per-file)); leave it
         None (all available files per trigger) for catch-up/backfill,
-        which naturally forms large epochs. Small epochs are fan
-        merge+write-bound, so a LATENCY target instead wants a short
+        which naturally forms large epochs. Small epochs are bound by
+        the per-epoch fixed cost (about 2 s for a 3k-row epoch on a
+        4-core host, perfbench ``ingest_live``: parse materialization
+        plus the job floor of the fact append and the eight sink
+        appends), so a LATENCY target instead wants a short
         ``processing_time`` and accepts the per-epoch overhead —
         the default 5 s trigger is the latency-leaning compromise,
         matching the reference's async-insert buffering horizon
@@ -687,8 +633,10 @@ class QuerylogPipeline:
 
     def sql(self, query: str) -> DataFrame:
         """Query the engine's tables in ClickHouse dialect — the SELECT
-        side of drop-in parity. Registers every aggregate sink plus
-        ``log2`` as temp views, the ClickHouse function shims
+        side of drop-in parity. Registers the aggregate sinks and
+        ``log2`` that the query names (a case-insensitive whole-word
+        match, so each call reads and lists only those tables) as temp
+        views, the ClickHouse function shims
         (functions/chsql.py), and transpiles the dialect differences
         (1-based ``expr[n]``, db prefixes, array ``length``), so a
         query a reference user runs against their ClickHouse today —
@@ -697,12 +645,16 @@ class QuerylogPipeline:
         ``toStartOfInterval`` — runs unchanged here."""
         from adguard2clickhouse_spark.functions import chsql
 
+        def named(table: str) -> bool:
+            return re.search(rf"\b{re.escape(table)}\b", query, re.I) is not None
+
         chsql.register_clickhouse_functions(self.spark)
         for name, sink in self.sinks.items():
-            df = sink.read(self.spark)
-            if df is not None:
-                df.createOrReplaceTempView(name)
-        if self.log2_sink.has_data():
+            if named(name):
+                df = sink.read(self.spark)
+                if df is not None:
+                    df.createOrReplaceTempView(name)
+        if named("log2") and self.log2_sink.has_data():
             self.read_log2().createOrReplaceTempView("log2")
         return self.spark.sql(chsql.transpile(query))
 
@@ -747,8 +699,9 @@ class QuerylogPipeline:
         all require manual INSERT SELECT surgery there; README.md:24-189
         defines them insert-time-only). Here the fact table is the
         source of truth: recompute any aggregate wholesale and swap it
-        in atomically via the sink's versioned pointer. Streaming can
-        keep appending — the next epoch folds onto the rebuilt base."""
+        in atomically via the sink's ledger pointer. Streaming can
+        keep appending — the next epoch's part lands on the rebuilt
+        base."""
         log2 = self.read_log2().persist()
         try:
             for name in names or list(self.aggregates):
@@ -816,15 +769,15 @@ class QuerylogPipeline:
 
         ``mode="delta"`` (default): the recovered lines flow through
         the SAME additive fan-out as a streaming micro-batch, under a
-        replay token derived from the dead-letter directory digest —
-        only the hash buckets the delta touches are rewritten, so at
-        100 TB a replay of 100 lines costs 100 lines, not a rescan of
-        the entire fact history (VERDICT r4 #3). A crashed replay can
-        be re-run: sinks that already folded this token no-op
-        (``applied_token``), sinks that didn't fold now; untouched
-        buckets' files are never rewritten (byte-identical — asserted
-        in tests/test_streaming.py). The token ledger is separate from
-        stream epochs on purpose — see ``SummingParquetSink.applied_token``.
+        replay token derived from the dead-letter content digest —
+        each aggregate sink appends one part and no existing file is
+        rewritten, so at 100 TB a replay of 100 lines costs 100 lines,
+        not a rescan of the entire fact history (VERDICT r4 #3;
+        byte-identical history asserted in tests/test_streaming.py). A
+        crashed replay can be re-run: sinks that already appended this
+        token no-op (``applied_token``), sinks that didn't append now.
+        The token ledger is separate from stream epochs on purpose —
+        see ``LedgeredFactSink.applied_token``.
 
         ``mode="rebuild"``: full recompute from the fact table via
         ``rebuild_aggregates`` — the right tool when the aggregate

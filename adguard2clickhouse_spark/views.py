@@ -14,8 +14,9 @@ they run today runs verbatim through ``spark.sql``:
 
 SummingMergeTree reads in ClickHouse must re-aggregate to be exact
 before merges settle (SURVEY.md §2.8 C2); our summing sink folds on
-every delta, so the views are exact as-is — one subtlety the Spark
-user no longer needs to know about.
+read — its ``read`` re-aggregates the committed parts — so the views
+are exact as-is, one subtlety the Spark user no longer needs to know
+about.
 """
 
 from __future__ import annotations
@@ -44,8 +45,8 @@ def register_views_from_pipeline(
     spark: SparkSession, out_dir: str, fact_view: str = "log2"
 ) -> list[str]:
     """Register the streaming engine's materialized state: the
-    date-partitioned fact table and the additively-folded sink tables
-    (exact without re-aggregation — the fold happens at write time)."""
+    date-partitioned fact table and the summing sink tables (exact:
+    each sink's read folds its parts)."""
     pipe = QuerylogPipeline(spark, source_dir="", out_dir=out_dir)
     pipe.read_log2().createOrReplaceTempView(fact_view)
     registered = [fact_view]

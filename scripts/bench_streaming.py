@@ -196,15 +196,15 @@ def main() -> None:
             "trigger_ms": d["durationMs"].get("triggerExecution"),
         })
 
-    # summing-sink rewrite accounting: pointer version == number of
-    # installs (bucket-set rewrites); buckets == live bucket dirs.
+    # summing-sink accounting: pointer version == number of commits
+    # (epoch parts plus folds); parts == live part directories.
     sinks = {}
     for name, sink in pipe.sinks.items():
         meta = sink._pointer()
         sinks[name] = {
-            "installs": meta["version"],
-            "live_buckets": len(meta["buckets"]),
-            "epochs_folded": len(meta["epochs"]),
+            "commits": meta["version"],
+            "live_parts": len(meta["dirs"]),
+            "epochs_committed": len(meta["epochs"]),
         }
 
     n_fact = pipe.read_log2().count()

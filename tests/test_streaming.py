@@ -104,6 +104,30 @@ def test_epoch_retry_is_noop(run_dirs, spark):
     assert newer["A"] == dict(before)["A"] + 40
 
 
+def test_sql_reads_only_the_tables_it_names(run_dirs, spark):
+    """pipe.sql lists and reads only the sinks (and log2) the query
+    names, matched as whole words in any case, and returns the rows a
+    direct read of that sink gives."""
+    src, out, pipe, _ = run_dirs
+    reads = []
+    for name, sink in pipe.sinks.items():
+        sink.read = (lambda real, n: lambda *a, **k: reads.append(n) or real(*a, **k))(
+            sink.read, name)
+    facts = pipe.log2_sink.has_data
+    pipe.log2_sink.has_data = lambda: reads.append("log2") or facts()
+    try:
+        rows = pipe.sql("SELECT QT, count FROM QT_Stats ORDER BY QT").collect()
+        assert reads == ["qt_stats"]
+        assert rows == sorted(pipe.sinks["qt_stats"].read(spark).collect())
+        reads.clear()
+        n = pipe.sql("SELECT count(*) AS n FROM AdGuardHome.log2").collect()[0].n
+        assert reads == ["log2"] and n == 70
+    finally:
+        for sink in pipe.sinks.values():
+            del sink.read
+        del pipe.log2_sink.has_data
+
+
 def test_log2_partitioned_by_date(run_dirs, spark):
     """date= partition dirs live INSIDE each committed epoch slot
     (cseq=N/date=D/...) since r10 — pruning still reaches the scan
@@ -649,101 +673,14 @@ def test_replay_dead_letters_recovers_fixed_lines(tmp_path, spark):
     assert got == expected["visited_domains"], "token retry double-counted"
 
 
-def test_dense_fold_strategy_auto_and_pinned(spark, tmp_path):
-    """ADVICE r6: r6 hardwired dense=True into every epoch, silently
-    trading away the sink's O(touched-state) contract. ADVICE r7
-    tightened auto again: the row count alone is the wrong quantity
-    (a 100k-row hot-key epoch touches ONE bucket), so auto now also
-    requires the sink's last sparse discovery to have OBSERVED a
-    delta touching every bucket. Pinned True/False override both
-    ways."""
-    pipe = QuerylogPipeline(spark, str(tmp_path / "s"), str(tmp_path / "o"))
-
-    class _Sink:  # only n_buckets + the observation are consulted
-        n_buckets = 8
-        last_fold_touched_all = None
-
-    s = _Sink()
-    assert pipe.dense_folds == "auto"
-    # no observation yet: sparse regardless of rows (first epoch measures)
-    assert pipe._dense_fold(s, 0) is False
-    assert pipe._dense_fold(s, 10_000) is False
-    s.last_fold_touched_all = True
-    assert pipe._dense_fold(s, 31) is False      # low-traffic epoch: sparse
-    assert pipe._dense_fold(s, 32) is True       # 4*n_buckets boundary
-    assert pipe._dense_fold(s, 10_000) is True
-    s.last_fold_touched_all = False              # hot-key history: sparse
-    assert pipe._dense_fold(s, 10_000) is False
-    wide = _Sink()
-    wide.n_buckets = 4096                        # future high-n_buckets sink
-    wide.last_fold_touched_all = True
-    assert pipe._dense_fold(wide, 10_000) is False
-
-    pinned_on = QuerylogPipeline(
-        spark, str(tmp_path / "s2"), str(tmp_path / "o2"), dense_folds=True)
-    assert pinned_on._dense_fold(s, 1) is True
-    pinned_off = QuerylogPipeline(
-        spark, str(tmp_path / "s3"), str(tmp_path / "o3"), dense_folds=False)
-    assert pinned_off._dense_fold(s, 10_000) is False
-
-
-def test_dense_regime_reprobes_and_recovers_from_traffic_shift(
-    spark, tmp_path
-):
-    """r10, closing the documented dense-state blindness: once a sink
-    flipped dense it never re-measured bucket coverage, so a traffic
-    shift to hot-key deltas kept rewriting every bucket forever. Every
-    Nth consecutive dense fold now runs sparse; its discovery job
-    re-observes coverage, and a shifted stream returns to the sparse
-    O(touched-state) path within N epochs and stays there."""
-    pipe = QuerylogPipeline(spark, str(tmp_path / "s"), str(tmp_path / "o"))
-    pipe.sparse_reprobe_every = 4
-
-    class _Sink:
-        n_buckets = 8
-        last_fold_touched_all = None
-
-    s = _Sink()
-    shifted = {"hot": False}
-
-    def epoch(n_rows):
-        """One epoch's strategy decision + the measurement a SPARSE
-        fold's discovery job performs (dense folds never measure)."""
-        dense = pipe._dense_fold(s, n_rows)
-        if not dense:
-            s.last_fold_touched_all = not shifted["hot"]
-        return dense
-
-    # keyed traffic: first epoch sparse (measures), then dense
-    assert epoch(10_000) is False
-    assert [epoch(10_000) for _ in range(3)] == [True, True, True]
-    # 4th consecutive dense candidate is the re-probe: runs sparse
-    assert epoch(10_000) is False
-    # traffic unchanged -> re-probe observed full coverage -> dense again
-    assert epoch(10_000) is True
-    # traffic SHIFTS to one hot key while the sink is dense
-    shifted["hot"] = True
-    decisions = [epoch(10_000) for _ in range(pipe.sparse_reprobe_every)]
-    assert False in decisions, "re-probe never fired within the cadence"
-    # ...and after the re-probe observed the shift, sparse sticks
-    assert [epoch(10_000) for _ in range(3)] == [False, False, False]
-    # disabling the cadence restores the r9 behavior (never re-probe)
-    pipe2 = QuerylogPipeline(spark, str(tmp_path / "s2"), str(tmp_path / "o2"))
-    pipe2.sparse_reprobe_every = 0
-    s2 = _Sink()
-    s2.last_fold_touched_all = True
-    assert all(pipe2._dense_fold(s2, 10_000) for _ in range(40))
-
-
 def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
     spark, tmp_path
 ):
-    """The property the auto strategy exists to preserve: after a big
-    (dense) epoch, a tiny follow-up epoch whose keys land in few
-    buckets must rewrite ONLY those buckets — every other bucket file
-    of every sink stays byte-identical."""
+    """The O(delta) write property end to end: after a big epoch, a
+    tiny follow-up epoch adds one part directory (``block=<seq>``) per
+    sink — every file of every sink's existing parts stays present and
+    byte-identical."""
     import hashlib
-    import shutil
 
     src, out = tmp_path / "src", tmp_path / "out"
     src.mkdir()
@@ -754,19 +691,17 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
     pipe = QuerylogPipeline(spark, str(src), str(out))
     pipe.run_available()
 
-    def _bucket_files(root):
+    def _part_files(root):
         return {
             os.path.relpath(os.path.join(r, f), root): hashlib.md5(
                 open(os.path.join(r, f), "rb").read()
             ).hexdigest()
             for r, _, fs in os.walk(root)
             for f in fs
-            if os.path.relpath(r, root).startswith("b")
+            if os.path.relpath(r, root).startswith("block=")
         }
 
-    before = {
-        name: _bucket_files(str(out / name)) for name in pipe.sinks
-    }
+    before = {name: _part_files(str(out / name)) for name in pipe.sinks}
 
     tiny = [_line(i, minute=3, filtered=False,
                   qh="tiny.example.com", ip="10.9.1.1")
@@ -774,23 +709,14 @@ def test_low_traffic_epoch_keeps_untouched_buckets_byte_identical(
     (src / "b.jsonl").write_text("\n".join(tiny) + "\n")
     pipe.run_available()
 
-    changed_only_touched = 0
-    for name, sink in pipe.sinks.items():
-        after = _bucket_files(str(out / name))
-        # every pre-existing file still present and byte-identical,
-        # except files in buckets the tiny delta actually touched
-        touched_dirs = {
-            p.split(os.sep)[0]
-            for p in set(after) - set(before[name])
-        }
+    for name in pipe.sinks:
+        after = _part_files(str(out / name))
         for p, digest in before[name].items():
-            if p.split(os.sep)[0] in touched_dirs:
-                continue
-            assert after.get(p) == digest, f"{name}:{p} rewritten by sparse fold"
-        # 3 rows, 1 key -> at most a couple of buckets per sink
-        assert len(touched_dirs) <= 2, (name, touched_dirs)
-        changed_only_touched += 1
-    assert changed_only_touched == len(pipe.sinks)
+            assert after.get(p) == digest, f"{name}:{p} rewritten by a later epoch"
+        # one part per sink; a sink whose delta is empty (no blocked
+        # lines in the tiny epoch) commits none
+        new_parts = {p.split(os.sep)[0] for p in set(after) - set(before[name])}
+        assert len(new_parts) == (name != "blocked_domains"), (name, new_parts)
 
 
 def test_fused_delta_auto_gates_on_epoch_rows(tmp_path, spark):
@@ -845,76 +771,15 @@ def test_strategy_knobs_reject_unknown_strings(spark, tmp_path):
     it must be a construction-time error."""
     import pytest
 
-    for knob in ("dense_folds", "fused_deltas"):
-        with pytest.raises(ValueError, match=knob):
-            QuerylogPipeline(
-                spark, str(tmp_path / "s"), str(tmp_path / "o"),
-                **{knob: "off"},
-            )
+    with pytest.raises(ValueError, match="fused_deltas"):
+        QuerylogPipeline(
+            spark, str(tmp_path / "s"), str(tmp_path / "o"), fused_deltas="off"
+        )
     # bool and "auto" stay accepted
-    QuerylogPipeline(
-        spark, str(tmp_path / "s2"), str(tmp_path / "o2"),
-        dense_folds=True, fused_deltas="auto",
-    )
-
-
-def test_reprobe_restores_sparse_folds_end_to_end(spark, tmp_path):
-    """VERDICT r9 ask #3's Done-criterion at the integration level: a
-    stream whose keyed traffic flipped a sink dense, then shifts to one
-    hot key, must return to the sparse O(touched-state) path within
-    sparse_reprobe_every epochs — observable as untouched bucket files
-    staying byte-identical across a later hot-key epoch."""
-    import hashlib
-
-    src, out = tmp_path / "src", tmp_path / "out"
-    src.mkdir()
-    pipe = QuerylogPipeline(spark, str(src), str(out))
-    pipe.sparse_reprobe_every = 2
-
-    def feed(epoch, hot):
-        lines = [
-            _line(
-                epoch * 100 + i,
-                minute=i % 9,
-                filtered=False,
-                qh="hot.example.com" if hot
-                else f"k{epoch * 100 + i}.example.com",
-                ip="10.9.0.1",
-            )
-            for i in range(40)  # >= 4 * n_buckets: dense-eligible
-        ]
-        (src / f"f{epoch:03d}.jsonl").write_text("\n".join(lines) + "\n")
-        pipe.run_available()
-
-    def vd_files():
-        d = str(out / "visited_domains")
-        return {
-            os.path.relpath(os.path.join(r, f), d): hashlib.md5(
-                open(os.path.join(r, f), "rb").read()
-            ).hexdigest()
-            for r, _, fs in os.walk(d)
-            for f in fs
-            if os.path.relpath(r, d).startswith("b")
-        }
-
-    for e in range(3):
-        feed(e, hot=False)   # keyed traffic: sink flips dense
-    for e in range(3, 3 + pipe.sparse_reprobe_every + 1):
-        feed(e, hot=True)    # shift: within the cadence a re-probe
-                             # observes single-bucket coverage
-    before = vd_files()
-    feed(99, hot=True)       # by now folds must be sparse again
-    after = vd_files()
-    survivors = set(before) & set(after)
-    assert survivors, "sparse never returned: every bucket file rewritten"
-    changed = {
-        p.split("/")[0]
-        for p in (set(before) ^ set(after) |
-                  {p for p in survivors if before[p] != after[p]})
-    }
-    assert len(changed) == 1, (
-        f"hot-key epoch should rewrite exactly the hot bucket, got {changed}"
-    )
+    for val in (True, False, "auto"):
+        QuerylogPipeline(
+            spark, str(tmp_path / "s2"), str(tmp_path / "o2"), fused_deltas=val
+        )
 
 
 def test_replay_works_on_adopted_legacy_dead_letters(tmp_path, spark):
@@ -1017,7 +882,8 @@ def test_checkpoint_recreation_does_not_drop_epochs(tmp_path, spark):
     """ADVICE r10 low: epoch ids restart at 0 when the checkpoint is
     deleted while out_dir is kept. Pre-r11 every new epoch up to the
     old high-water mark silently vanished from log2; the epoch ledger
-    is now scoped to the streaming-query identity."""
+    is now scoped to the streaming-query identity — on every sink, so
+    the aggregates keep counting exactly what log2 holds."""
     import shutil as _shutil
 
     src = tmp_path / "src"
@@ -1051,6 +917,14 @@ def test_checkpoint_recreation_does_not_drop_epochs(tmp_path, spark):
     # dedupe_horizon exists for), but the NEW files must never vanish.
     qhs = {r.QH for r in pipe2.read_log2().select("QH").distinct().collect()}
     assert {"a3.example.com", "a4.example.com"} <= qhs
+    # every aggregate appended the re-read epochs too: each equals the
+    # same aggregate recomputed from the fact table
+    log2 = pipe2.read_log2()
+    for name, fn in agg.ALL_AGGREGATES.items():
+        want = fn(log2)
+        got = pipe2.read_aggregate(name)  # None: no rows (nothing blocked)
+        got = [] if got is None else got.select(*want.columns).collect()
+        assert sorted(got) == sorted(want.collect()), name
 
 
 def test_noisy_source_dead_channel_stays_bounded(tmp_path, spark):

@@ -1,12 +1,13 @@
-"""SummingParquetSink bucketed-state + epoch high-water-mark gates
-(VERDICT r2 #2).
+"""SummingParquetSink: append-only parts, fold on read, tiered folds.
 
-The scale contract under test: a delta that hashes into one bucket
-must leave every other bucket's data files untouched on disk — same
-paths, same bytes — because an O(state) rewrite per 5-second epoch is
-exactly what kills a high-cardinality aggregate (per-client per-10-min
-stats2 over years). And idempotency must survive epochs older than the
-tracked window via the high-water mark.
+The scale contract under test: an epoch appends one part and never
+rewrites or deletes an existing file — an O(state) rewrite per
+5-second epoch is exactly what kills a high-cardinality aggregate
+(per-client per-10-min stats2 over years). A background fold must leave
+``read()`` unchanged for every fold kind, idempotency must hold across
+folds and survive epochs older than the tracked window via the
+high-water mark, and a table written in the older bucketed layout must
+keep its rows and accept new epochs.
 """
 
 from __future__ import annotations
@@ -18,94 +19,57 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from adguard2clickhouse_spark.sinks.summing import (
-    _MAX_EPOCHS_TRACKED,
-    SummingParquetSink,
-)
+from adguard2clickhouse_spark.sinks.facts import _MAX_EPOCHS_TRACKED, LedgeredFactSink
+from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
 
 
 def _data_file_digests(root: str) -> dict[str, str]:
-    """{relpath: sha256} for every parquet data file under root."""
+    """{relpath: sha256} for every file under root but the pointer and
+    its lock, which change on every commit."""
     out = {}
     for dirpath, _, files in os.walk(root):
         for f in files:
-            if f.endswith(".parquet"):
-                p = Path(dirpath) / f
-                out[str(p.relative_to(root))] = hashlib.sha256(
-                    p.read_bytes()
-                ).hexdigest()
+            p = Path(dirpath) / f
+            rel = str(p.relative_to(root))
+            if not rel.startswith("CURRENT."):
+                out[rel] = hashlib.sha256(p.read_bytes()).hexdigest()
     return out
 
 
-def _mk_sink(tmp_path, spark, rows, n_buckets=8):
-    sink = SummingParquetSink(
-        str(tmp_path / "tbl"), keys=["k"], measures=["cnt"], n_buckets=n_buckets
-    )
+def _mk_sink(tmp_path, spark, rows):
+    sink = SummingParquetSink(str(tmp_path / "tbl"), keys=["k"], measures=["cnt"])
     df = spark.createDataFrame(rows, ["k", "cnt"])
     sink.apply_delta(df, epoch_id=0)
     return sink
 
 
-def test_single_bucket_delta_leaves_other_buckets_byte_identical(tmp_path, spark):
-    # seed with enough distinct keys that several buckets exist
-    seed = [(f"key{i}", 1) for i in range(64)]
-    sink = _mk_sink(tmp_path, spark, seed)
-    meta0 = sink._pointer()
-    assert len(meta0["buckets"]) > 1, "need multi-bucket state for this test"
-
-    before = _data_file_digests(sink.path)
-
-    # a delta with exactly one key → exactly one bucket touched
-    delta = spark.createDataFrame([("key0", 5)], ["k", "cnt"])
-    bucket_of_key0 = delta.select(
-        F.pmod(F.xxhash64("k"), F.lit(sink.n_buckets)).alias("b")
-    ).first()["b"]
-    sink.apply_delta(delta, epoch_id=1)
-
-    after = _data_file_digests(sink.path)
-    meta1 = sink._pointer()
-
-    touched_dir = f"b{bucket_of_key0:04d}"
-    for rel, digest in before.items():
-        if rel.startswith(touched_dir):
-            continue  # the one rewritten bucket
-        assert rel in after, f"untouched bucket file vanished: {rel}"
-        assert after[rel] == digest, f"untouched bucket file rewritten: {rel}"
-    # only that bucket's version advanced
-    for b, v in meta0["buckets"].items():
-        if int(b) != bucket_of_key0:
-            assert meta1["buckets"][b] == v
-
-    # and the fold is correct
-    got = dict(sink.read(spark).collect())
-    assert got["key0"] == 6 and got["key1"] == 1
-
-
-def test_multi_bucket_delta_touches_only_its_buckets(tmp_path, spark):
-    seed = [(f"key{i}", 1) for i in range(64)]
-    sink = _mk_sink(tmp_path, spark, seed)
-    before = _data_file_digests(sink.path)
-
-    delta_rows = [("key0", 2), ("key17", 3), ("key42", 4)]
-    delta = spark.createDataFrame(delta_rows, ["k", "cnt"])
-    touched = {
-        r["b"]
-        for r in delta.select(
-            F.pmod(F.xxhash64("k"), F.lit(sink.n_buckets)).alias("b")
-        ).collect()
-    }
-    sink.apply_delta(delta, epoch_id=1)
-    after = _data_file_digests(sink.path)
-
-    touched_dirs = {f"b{b:04d}" for b in touched}
-    for rel, digest in before.items():
-        if any(rel.startswith(d) for d in touched_dirs):
-            continue
-        assert after.get(rel) == digest, f"untouched bucket rewritten: {rel}"
+def test_epoch_appends_one_part_and_never_rewrites_existing_files(tmp_path, spark):
+    """The O(delta) write contract: an epoch stages its delta as one
+    new part and commits it; no existing file is rewritten or deleted,
+    whatever keys the delta carries (hot key, many keys, keys already
+    in state). Reads fold the parts."""
+    sink = _mk_sink(tmp_path, spark, [(f"key{i}", 1) for i in range(64)])
+    deltas = [
+        [("key0", 5)],
+        [("key0", 2), ("key17", 3), ("key42", 4), ("new", 9)],
+        [(f"key{i}", 10) for i in range(64)],
+    ]
+    for epoch, rows in enumerate(deltas, start=1):
+        before = _data_file_digests(sink.path)
+        parts_before = set(sink._pointer()["dirs"])
+        sink.apply_delta(spark.createDataFrame(rows, ["k", "cnt"]), epoch_id=epoch)
+        after = _data_file_digests(sink.path)
+        assert {p: after.get(p) for p in before} == before, "existing file touched"
+        new_parts = set(sink._pointer()["dirs"]) - parts_before
+        assert len(new_parts) == 1 and parts_before < set(sink._pointer()["dirs"])
+        (part,) = new_parts
+        assert all(p.startswith(part + os.sep) for p in set(after) - set(before))
+    assert sink._pointer()["version"] == 1 + len(deltas)  # one commit per epoch
 
     got = dict(sink.read(spark).collect())
-    assert got["key0"] == 3 and got["key17"] == 4 and got["key42"] == 5
-    assert got["key1"] == 1
+    assert got["key0"] == 1 + 5 + 2 + 10
+    assert got["key17"] == 1 + 3 + 10 and got["key1"] == 11 and got["new"] == 9
+    assert len(got) == 65
 
 
 def test_epoch_high_water_mark_survives_window_eviction(tmp_path, spark):
@@ -153,9 +117,7 @@ def test_replace_preserves_epoch_history(tmp_path, spark):
 
 
 def test_null_keys_fold(tmp_path, spark):
-    sink = SummingParquetSink(
-        str(tmp_path / "tbl"), keys=["k"], measures=["cnt"], n_buckets=4
-    )
+    sink = SummingParquetSink(str(tmp_path / "tbl"), keys=["k"], measures=["cnt"])
     df = spark.createDataFrame([(None, 1), (None, 2), ("x", 3)], "k string, cnt long")
     sink.apply_delta(df, epoch_id=0)
     sink.apply_delta(
@@ -282,116 +244,129 @@ def test_streaming_pipeline_with_hll_sink(tmp_path, spark):
     assert got == want
 
 
-def test_dense_fold_equals_sparse_and_stays_idempotent(tmp_path, spark):
-    """dense=True (the streaming hot path, r6) must produce the SAME
-    table state as the sparse bucket-pruned fold — same rows, same
-    epoch ledger semantics — it only skips the touched-bucket
-    discovery job. Also: a dense retry of an applied epoch no-ops, and
-    a dense fold composes with a later sparse fold."""
-    rows = [(f"key{i}", i) for i in range(64)]
-    d1 = [(f"key{i}", 10) for i in range(0, 64, 3)]
-    d2 = [("key1", 7), ("newkey", 2)]
-
-    sparse = SummingParquetSink(
-        str(tmp_path / "sparse"), keys=["k"], measures=["cnt"]
+def _fold_sink(tmp_path, spark, name="t"):
+    """A sink with one measure of each fold kind, and a delta builder."""
+    sink = SummingParquetSink(
+        str(tmp_path / name), keys=["Upstream"],
+        measures=["n", "max_elapsed", "min_elapsed", "ip_sketch"],
+        folds={"max_elapsed": "max", "min_elapsed": "min",
+               "ip_sketch": "hll_union"},
     )
-    dense = SummingParquetSink(
-        str(tmp_path / "dense"), keys=["k"], measures=["cnt"]
-    )
-    frames = [
-        spark.createDataFrame(r, ["k", "cnt"]) for r in (rows, d1, d2)
-    ]
-    for e, f in enumerate(frames):
-        sparse.apply_delta(f, epoch_id=e)
-        dense.apply_delta(f, epoch_id=e, dense=True)
 
-    def state(sink):
-        return sorted(
-            (r.k, r.cnt) for r in sink.read(spark).collect()
+    def delta(rows):
+        df = spark.createDataFrame(rows, ["Upstream", "IP", "Elapsed"])
+        return df.groupBy("Upstream").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("Elapsed").alias("max_elapsed"),
+            F.min("Elapsed").alias("min_elapsed"),
+            F.hll_sketch_agg("IP").alias("ip_sketch"),
         )
 
-    assert state(dense) == state(sparse)
-
-    # dense retry of an applied epoch: no-op (state unchanged)
-    dense.apply_delta(frames[2], epoch_id=2, dense=True)
-    assert state(dense) == state(sparse)
-
-    # dense then sparse compose: one more delta via the pruned path
-    d3 = spark.createDataFrame([("key1", 100)], ["k", "cnt"])
-    sparse.apply_delta(d3, epoch_id=3)
-    dense.apply_delta(d3, epoch_id=3, dense=True)
-    assert state(dense) == state(sparse)
+    return sink, delta
 
 
-def test_auto_dense_gate_tracks_delta_keys_not_epoch_rows(tmp_path, spark):
-    """ADVICE r7: dense_folds="auto" gated on the RAW epoch row count,
-    so a 100k-row epoch on one hot key picked dense and rewrote every
-    bucket. The gate must reflect the delta's distinct-key coverage:
-    the sink records whether the last sparse discovery touched all
-    buckets, and auto goes dense only after observing full coverage."""
-    from adguard2clickhouse_spark.streaming.pipeline import QuerylogPipeline
-
-    sink = SummingParquetSink(
-        str(tmp_path / "s"), keys=["k"], measures=["cnt"], n_buckets=8
+def _fold_state(sink, spark):
+    return sorted(
+        tuple(r) for r in sink.read(spark).select(
+            "Upstream", "n", "max_elapsed", "min_elapsed",
+            F.hll_sketch_estimate("ip_sketch").alias("uniq"),
+        ).collect()
     )
-    pipe = object.__new__(QuerylogPipeline)  # only the fold knobs are read
-    pipe.dense_folds = "auto"
-    pipe.sparse_reprobe_every = 16
-    pipe._dense_streaks = {}
 
-    # no observation yet: even a huge epoch must start sparse
-    assert pipe._dense_fold(sink, n_rows=100_000) is False
 
-    # hot-key delta (1 distinct key): sparse fold observes 1/8 buckets
-    hot = spark.createDataFrame([("hotkey", 100_000)], ["k", "cnt"])
-    sink.apply_delta(hot, epoch_id=0)
-    assert sink.last_fold_touched_all is False
-    assert pipe._dense_fold(sink, n_rows=100_000) is False
+def _epoch_rows(e):
+    return [(f"up{(e + i) % 3}", f"10.0.{e}.{i % 7}", 100 * e + i)
+            for i in range(12)]
 
-    # spread delta touching all 8 buckets: observation flips, and auto
-    # goes dense only when rows also clear the 4x-buckets floor
-    spread = spark.createDataFrame(
-        [(f"key{i}", 1) for i in range(256)], ["k", "cnt"]
+
+def test_tiered_fold_keeps_read_and_lowers_part_count(tmp_path, spark):
+    """A size-tiered fold merges k parts into one, folding equal keys
+    with each measure's own fold: read() is multiset-equal before and
+    after (sum, max, min and hll_union alike), the part count drops,
+    and the folded part holds one row per key."""
+    sink, delta = _fold_sink(tmp_path, spark)
+    for e in range(4):
+        sink.apply_delta(delta(_epoch_rows(e)), epoch_id=e)
+    before = _fold_state(sink, spark)
+    assert len(sink._pointer()["dirs"]) == 4
+
+    assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 4
+    assert len(sink._pointer()["dirs"]) == 1
+    assert _fold_state(sink, spark) == before
+    # the folded part is already folded: one row per key on disk
+    raw = LedgeredFactSink.read(sink, spark)
+    assert raw.count() == raw.select("Upstream").distinct().count() == 3
+    # and it equals a one-shot aggregation of every epoch's rows
+    want = delta([r for e in range(4) for r in _epoch_rows(e)])
+    assert before == sorted(
+        tuple(r) for r in want.select(
+            "Upstream", "n", "max_elapsed", "min_elapsed",
+            F.hll_sketch_estimate("ip_sketch").alias("uniq"),
+        ).collect()
     )
-    sink.apply_delta(spread, epoch_id=1)
-    assert sink.last_fold_touched_all is True
-    assert pipe._dense_fold(sink, n_rows=256) is True
-    assert pipe._dense_fold(sink, n_rows=8) is False
-
-    # pinned strategies ignore the observation
-    pipe.dense_folds = True
-    assert pipe._dense_fold(sink, n_rows=1) is True
-    pipe.dense_folds = False
-    assert pipe._dense_fold(sink, n_rows=10**6) is False
 
 
-def test_hot_key_epoch_leaves_untouched_buckets_byte_identical(tmp_path, spark):
-    """The property the auto gate exists to protect: a single-key delta
-    folded sparsely rewrites only that key's bucket — every other
-    bucket's files stay byte-identical."""
-    sink = SummingParquetSink(
-        str(tmp_path / "s"), keys=["k"], measures=["cnt"], n_buckets=8
-    )
-    base = spark.createDataFrame(
-        [(f"key{i}", 1) for i in range(256)], ["k", "cnt"]
-    )
-    sink.apply_delta(base, epoch_id=0)
+def test_retried_epoch_and_token_noop_before_and_after_fold(tmp_path, spark):
+    sink, delta = _fold_sink(tmp_path, spark)
+    for e in range(3):
+        sink.apply_delta(delta(_epoch_rows(e)), epoch_id=e)
+    sink.apply_delta(delta(_epoch_rows(7)), token="replay-1")
+    state = _fold_state(sink, spark)
 
-    def bucket_files():
-        out = {}
-        for p in sorted(Path(sink.path).rglob("*.parquet")):
-            out[str(p)] = hashlib.sha256(p.read_bytes()).hexdigest()
-        return out
+    # before the fold: retries change nothing and commit nothing
+    version = sink._pointer()["version"]
+    sink.apply_delta(delta(_epoch_rows(2)), epoch_id=2)
+    sink.apply_delta(delta(_epoch_rows(7)), token="replay-1")
+    assert _fold_state(sink, spark) == state
+    assert sink._pointer()["version"] == version
 
-    before = bucket_files()
-    hot = spark.createDataFrame([("key1", 50)], ["k", "cnt"])
-    sink.apply_delta(hot, epoch_id=1)  # sparse: default
-    after = bucket_files()
-    # untouched buckets: same files, same bytes (new files appear only
-    # under the one rewritten bucket's next version dir)
-    surviving = {p: h for p, h in before.items() if p in after}
-    assert surviving == {p: h for p, h in after.items() if p in before}
-    changed_dirs = {
-        str(Path(p).parent) for p in set(after) - set(before)
-    }
-    assert len(changed_dirs) == 1, changed_dirs
+    assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 4
+    assert _fold_state(sink, spark) == state
+    # after the fold: the ledgers survived it
+    assert sink.applied(1) and sink.applied_token("replay-1")
+    sink.apply_delta(delta(_epoch_rows(1)), epoch_id=1)
+    sink.apply_delta(delta(_epoch_rows(7)), token="replay-1")
+    assert _fold_state(sink, spark) == state
+    # a new epoch still lands on the folded state
+    sink.apply_delta(delta(_epoch_rows(3)), epoch_id=3)
+    assert _fold_state(sink, spark) != state
+    assert sink._pointer()["epoch_hwm"] == 3
+
+
+def test_bucketed_layout_is_adopted(tmp_path, spark):
+    """A table written by the bucketed sink (CURRENT.json naming one
+    b<bucket>/v<version> directory per hash bucket) opens with the same
+    rows and ledgers, and accepts new epochs."""
+    import json
+
+    root = tmp_path / "legacy"
+    buckets = {"0": 3, "5": 1}
+    rows = {"0": [("a", 4), ("b", 1)], "5": [("c", 7)]}
+    for b, v in buckets.items():
+        spark.createDataFrame(rows[b], ["k", "cnt"]).coalesce(1).write.parquet(
+            str(root / f"b{int(b):04d}" / f"v{v:08d}"))
+    # a superseded version a crash left behind is not part of the table
+    spark.createDataFrame([("a", 100)], ["k", "cnt"]).write.parquet(
+        str(root / "b0000" / "v00000001"))
+    (root / "CURRENT.json").write_text(json.dumps({
+        "version": 3, "buckets": buckets, "epochs": [0, 1, 2],
+        "epoch_hwm": 2, "replay_tokens": ["replay-x"],
+    }))
+
+    sink = SummingParquetSink(str(root), keys=["k"], measures=["cnt"])
+    assert dict(sink.read(spark).collect()) == {"a": 4, "b": 1, "c": 7}
+    meta = sink._pointer()
+    assert "buckets" not in meta and meta["version"] == 4
+    assert not any(p.name.startswith("b0") for p in root.iterdir())
+    # ledgers carried over: retries no-op
+    assert sink.applied(2) and sink.applied_token("replay-x")
+    sink.apply_delta(spark.createDataFrame([("a", 50)], ["k", "cnt"]), epoch_id=2)
+    assert dict(sink.read(spark).collect())["a"] == 4
+    # new epochs append
+    sink.apply_delta(spark.createDataFrame([("a", 1), ("d", 2)], ["k", "cnt"]),
+                     epoch_id=3)
+    assert dict(sink.read(spark).collect()) == {"a": 5, "b": 1, "c": 7, "d": 2}
+    assert sink._pointer()["version"] == 5
+    # reopening the adopted table is a no-op
+    again = SummingParquetSink(str(root), keys=["k"], measures=["cnt"])
+    assert dict(again.read(spark).collect()) == {"a": 5, "b": 1, "c": 7, "d": 2}
