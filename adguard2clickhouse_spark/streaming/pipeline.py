@@ -541,7 +541,7 @@ class QuerylogPipeline:
         self.sizing_hint = (
             f"SMALL-EPOCH REGIME: the last {self.sizing_hint_epochs} "
             f"micro-batches carried a median of {int(med):,} rows. The "
-            "per-epoch fixed cost (about 2 s for a 3k-row epoch on a "
+            "per-epoch fixed cost (about 2.3 s for a 3k-row epoch on a "
             "4-core host: parse materialization plus the job floor of "
             "the fact append and the eight sink appends) makes this "
             "overhead-bound. Raise maxFilesPerTrigger / "
@@ -571,7 +571,7 @@ class QuerylogPipeline:
         fixed-size files (pick ceil(500k / rows-per-file)); leave it
         None (all available files per trigger) for catch-up/backfill,
         which naturally forms large epochs. Small epochs are bound by
-        the per-epoch fixed cost (about 2 s for a 3k-row epoch on a
+        the per-epoch fixed cost (about 2.3 s for a 3k-row epoch on a
         4-core host, perfbench ``ingest_live``: parse materialization
         plus the job floor of the fact append and the eight sink
         appends), so a LATENCY target instead wants a short

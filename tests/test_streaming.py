@@ -110,11 +110,17 @@ def test_sql_reads_only_the_tables_it_names(run_dirs, spark):
     direct read of that sink gives."""
     src, out, pipe, _ = run_dirs
     reads = []
+
+    def counted(name, real):
+        def call(*args, **kwargs):
+            reads.append(name)
+            return real(*args, **kwargs)
+
+        return call
+
     for name, sink in pipe.sinks.items():
-        sink.read = (lambda real, n: lambda *a, **k: reads.append(n) or real(*a, **k))(
-            sink.read, name)
-    facts = pipe.log2_sink.has_data
-    pipe.log2_sink.has_data = lambda: reads.append("log2") or facts()
+        sink.read = counted(name, sink.read)
+    pipe.log2_sink.has_data = counted("log2", pipe.log2_sink.has_data)
     try:
         rows = pipe.sql("SELECT QT, count FROM QT_Stats ORDER BY QT").collect()
         assert reads == ["qt_stats"]
