@@ -333,10 +333,12 @@ def test_retried_epoch_and_token_noop_before_and_after_fold(tmp_path, spark):
     assert sink._pointer()["epoch_hwm"] == 3
 
 
-def test_bucketed_layout_is_adopted(tmp_path, spark):
+@pytest.mark.parametrize("crashed", [False, True])
+def test_bucketed_layout_is_adopted(tmp_path, spark, crashed):
     """A table written by the bucketed sink (CURRENT.json naming one
     b<bucket>/v<version> directory per hash bucket) opens with the same
-    rows and ledgers, and accepts new epochs."""
+    rows and ledgers, and accepts new epochs — also when an earlier
+    adoption crashed after moving some bucket files into the part."""
     import json
 
     root = tmp_path / "legacy"
@@ -352,6 +354,12 @@ def test_bucketed_layout_is_adopted(tmp_path, spark):
         "version": 3, "buckets": buckets, "epochs": [0, 1, 2],
         "epoch_hwm": 2, "replay_tokens": ["replay-x"],
     }))
+
+    if crashed:  # bucket 0's files already moved, pointer not yet swapped
+        part = root / "block=00000004"
+        part.mkdir()
+        for f in (root / "b0000" / "v00000003").glob("part-*"):
+            f.rename(part / f"b0000-{f.name}")
 
     sink = SummingParquetSink(str(root), keys=["k"], measures=["cnt"])
     assert dict(sink.read(spark).collect()) == {"a": 4, "b": 1, "c": 7}
