@@ -1,7 +1,7 @@
 """Additive "summing" sink — the SummingMergeTree contract natively.
 
 In the reference, every insert block triggers the MVs to emit delta
-rows into SummingMergeTree tables (/root/reference/README.md:24-189,
+rows into SummingMergeTree tables (reference README.md:24-189,
 SURVEY.md §2.8 C1/C2). There an INSERT only appends an immutable part,
 background merges fold rows with equal ORDER BY keys, and a SELECT
 re-aggregates because parts not yet merged can hold the same key. This
