@@ -41,7 +41,8 @@ Contract semantics (each is load-bearing for exactly-once delivery):
 **replace(df, bump_generation=False) -> None**
   Wholesale atomic swap of the table content — the epoch/token
   ledgers SURVIVE (a retried epoch must still be recognized after a
-  rewrite). ``bump_generation=True`` advances ``generation()`` in the
+  rewrite). The superseded content is retired, not deleted: a reader
+  holding the old snapshot finishes, as after a compaction. ``bump_generation=True`` advances ``generation()`` in the
   same commit; the dead-letter replay uses it to salt its replay
   token so two byte-identical dead populations at different times
   mint different tokens.
@@ -56,8 +57,10 @@ Contract semantics (each is load-bearing for exactly-once delivery):
   (never rewrite compacted history); ``max_fold_slots=k`` requests
   ONE bounded incremental step (k similar-sized objects, size-tiered)
   so maintenance can run per-epoch without stalling ingest. Returns
-  objects folded away (0 = nothing to do). Must be safe to run
-  concurrently with appends from the owning process.
+  objects folded away (0 = nothing to do); each step that folds
+  removes at least one object, so a caller can repeat it until it
+  returns 0. Must be safe to run concurrently with appends from the
+  owning process.
 
 **stream_id (assignable attribute)**
   The streaming-query identity scoping the epoch ledger: a CHANGED

@@ -43,8 +43,8 @@ fire-and-forget — /root/reference/src/collector.py:73-75). Cost per
 epoch is one rename plus one small JSON write; the ledger grows one
 entry per epoch and ``compact()`` folds old epochs into one directory
 when the listing (or small-file count) becomes the bottleneck —
-bounded maintenance, not a per-read cost (the pipeline now schedules
-that automatically between epochs — ``QuerylogPipeline.process_batch``).
+bounded maintenance, not a per-read cost (the pipeline runs it on its
+maintenance thread after each epoch — ``QuerylogPipeline.process_batch``).
 
 Writer discipline (r11): single-writer is ENFORCED, not documented —
 every pointer read-modify-write runs under an advisory ``flock`` on
@@ -152,12 +152,12 @@ class LedgeredFactSink(FactSink):
         # deployment discipline applies, and a crashed process's
         # leftover stages are exactly the orphans GC exists to remove.
         self._live_stages: set[str] = set()
-        # Retired-slot retention (r12): compaction folds COMMIT the new
+        # Retired-slot retention: folds and replace() COMMIT the new
         # slot atomically but must not delete the superseded slots
         # immediately — a reader that listed the old pointer may still
         # be mid-scan (the exact race Delta/Iceberg split commit from
-        # VACUUM for; observed as FileNotFoundException the moment
-        # folds moved off the writer thread). Folded slots are instead
+        # VACUUM for; observed as FileNotFoundException when slots
+        # were deleted at once). Superseded slots are instead
         # recorded in the pointer's trash list and physically removed
         # by later commits once older than this many seconds — size it
         # above the longest reader job, like a VACUUM retention.
@@ -344,23 +344,6 @@ class LedgeredFactSink(FactSink):
         hwm = meta["epoch_hwm"]
         return epoch_id in meta["epochs"] or (hwm is not None and epoch_id <= hwm)
 
-    def _stage_and_publish(
-        self, df: DataFrame, seq: int
-    ) -> tuple[str | None, int]:
-        """Write ``df`` to a private stage directory with the sink's
-        layout, then rename it into committed slot ``cseq=<seq>``.
-        Returns ``(slot_basename, slot_bytes)``, or ``(None, 0)`` when
-        the frame produced no rows (the stage is dropped — publishing
-        data-less directories would grow the committed listing
-        forever). The slot is NOT yet visible: callers commit it via
-        ``_write_pointer`` (recording the bytes in ``dir_bytes`` so
-        compaction tiering never re-stats committed slots). Callers
-        hold the writer lock."""
-        stage, nbytes = self._stage(df)
-        if stage is None:
-            return None, 0
-        return self._publish(stage, seq), nbytes
-
     def _stage(self, df: DataFrame) -> tuple[str | None, int]:
         """Write ``df`` to a private ``.stage.<uuid>`` directory with
         the sink's layout. Returns ``(stage_path, bytes)``, or
@@ -484,6 +467,50 @@ class LedgeredFactSink(FactSink):
                 kept.append(t)
         return kept, expired
 
+    def _commit(
+        self,
+        meta: dict,
+        stage: str | None,
+        nbytes: int,
+        retired: list[str] | tuple[str, ...] = (),
+        **ledger,
+    ) -> None:
+        """The one commit step of every write (append, replace,
+        compact): publish ``stage`` (None for an empty frame) as the
+        next slot, drop the ``retired`` slots from ``dirs`` and
+        ``dir_bytes`` into the trash list, sweep trash past its
+        retention, and write the pointer with the ``ledger`` fields
+        updated — the single visibility point. Retired slots stay on
+        disk for ``trash_retention_s`` (a reader holding the previous
+        pointer may still be scanning them); the expired ones are
+        deleted only AFTER the pointer write, so a crash in between
+        leaves them as plain orphans for the next GC (no longer in dirs
+        or trash). Callers hold the writer lock."""
+        seq = meta["seq"] + 1
+        dirs = [d for d in meta["dirs"] if d not in retired]
+        dir_bytes = {
+            d: meta["dir_bytes"][d] for d in dirs if d in meta["dir_bytes"]
+        }
+        if stage is not None:
+            slot = self._publish(stage, seq)
+            dirs.append(slot)
+            dir_bytes[slot] = nbytes
+        trash, expired = self._swept_trash(meta)
+        t_retired = time.time()
+        trash += [{"dir": d, "t": t_retired} for d in retired]
+        self._write_pointer(
+            {
+                **meta,
+                **ledger,
+                "seq": seq,
+                "dirs": dirs,
+                "dir_bytes": dir_bytes,
+                "trash": trash,
+            }
+        )
+        for d in expired:
+            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+
     # -- public API ----------------------------------------------------------
     def append(
         self,
@@ -517,16 +544,9 @@ class LedgeredFactSink(FactSink):
 
         # Empty epoch: commit the epoch id for idempotency without
         # publishing a data-less directory (an empty frame can still
-        # leave a 0-row part file, so _stage_and_publish reads the
-        # local footers — driver-side metadata, no Spark job).
-        seq = meta["seq"] + 1
-        dirs = list(meta["dirs"])
-        dir_bytes = dict(meta["dir_bytes"])
-        slot, nbytes = self._stage_and_publish(df, seq)
-        if slot is not None:
-            dirs.append(slot)
-            dir_bytes[slot] = nbytes
-
+        # leave a 0-row part file, so _stage reads the local footers —
+        # driver-side metadata, no Spark job).
+        stage, nbytes = self._stage(df)
         epochs, hwm = meta["epochs"], meta["epoch_hwm"]
         if epoch_id is not None:
             epochs = (epochs + [epoch_id])[-_MAX_EPOCHS_TRACKED:]
@@ -534,21 +554,9 @@ class LedgeredFactSink(FactSink):
         tokens = meta["tokens"]
         if token is not None:
             tokens = (tokens + [token])[-_MAX_EPOCHS_TRACKED:]
-        trash, expired = self._swept_trash(meta)
-        self._write_pointer(
-            {
-                **meta,
-                "seq": seq,
-                "dirs": dirs,
-                "epochs": epochs,
-                "epoch_hwm": hwm,
-                "tokens": tokens,
-                "dir_bytes": dir_bytes,
-                "trash": trash,
-            }
+        self._commit(
+            meta, stage, nbytes, epochs=epochs, epoch_hwm=hwm, tokens=tokens
         )
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
         return True
 
     def has_data(self) -> bool:
@@ -584,36 +592,28 @@ class LedgeredFactSink(FactSink):
         return self._pointer()["generation"]
 
     def replace(self, df: DataFrame, bump_generation: bool = False) -> None:
-        """Wholesale swap (dead-letter rewrite after replay, compaction
-        target): stage the new content — while any reader of the OLD
+        """Wholesale swap (dead-letter rewrite after replay, aggregate
+        rebuild): stage the new content — while any reader of the OLD
         committed dirs, including ``df`` itself when it derives from
         this sink, can still finish — then commit a ledger pointing
-        only at the new directory and delete the superseded ones.
-        Serialized by the pointer lock (a swap racing a live append
-        would otherwise lose whichever pointer write landed first).
-        ``bump_generation`` advances the content generation atomically
-        with the swap (see ``generation``)."""
+        only at the new directory and retire the superseded ones to
+        trash, like a fold does. Stages under the pointer lock: the
+        swap supersedes EVERY committed slot, so an append landing
+        while it staged would be lost with them. The epoch/token
+        history survives the swap (a concurrent stream's retried epoch
+        must still be recognized as committed). ``bump_generation``
+        advances the content generation atomically with the swap (see
+        ``generation``)."""
         with self._locked():
-            self._replace(df, bump_generation)
-
-    def _replace(self, df: DataFrame, bump_generation: bool = False) -> None:
-        meta = self._pointer()
-        seq = meta["seq"] + 1
-        old_dirs = list(meta["dirs"])
-        slot, nbytes = self._stage_and_publish(df, seq)
-        # epoch/token history survives the swap: a concurrent stream's
-        # retried epoch must still be recognized as committed.
-        self._write_pointer(
-            {
-                **meta,
-                "seq": seq,
-                "dirs": [slot] if slot else [],
-                "dir_bytes": {slot: nbytes} if slot else {},
-                "generation": meta["generation"] + (1 if bump_generation else 0),
-            }
-        )
-        for d in old_dirs:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
+            meta = self._pointer()
+            stage, nbytes = self._stage(df)
+            self._commit(
+                meta,
+                stage,
+                nbytes,
+                retired=meta["dirs"],
+                generation=meta["generation"] + (1 if bump_generation else 0),
+            )
 
     def compact(
         self,
@@ -621,66 +621,55 @@ class LedgeredFactSink(FactSink):
         small_bytes: int | None = None,
         max_fold_slots: int | None = None,
     ) -> int:
-        """Fold committed epoch directories together (the maintenance
-        answer to per-epoch directory growth). Returns the number of
-        directories folded away.
+        """Fold committed slots together (the maintenance answer to
+        per-epoch directory growth). Returns the number of slots
+        folded away, 0 when there is nothing to do.
 
-        ``small_bytes=None`` folds EVERYTHING into one directory —
-        fine for tables that fit a rewrite. At warehouse scale a full
-        rewrite is exactly the cost this sink exists to avoid, so pass
-        ``small_bytes``: only directories smaller than that threshold
-        are merged (the steady trickle of micro-batch epochs), while
-        already-compacted large slots are left untouched — each
-        maintenance run costs O(recent small epochs), not O(table),
-        and repeated runs converge to a few large slots.
+        ``small_bytes=None`` (with ``max_fold_slots=None``) folds
+        EVERYTHING into one slot — fine for tables that fit a rewrite.
+        At warehouse scale a full rewrite is exactly the cost this sink
+        exists to avoid, so pass ``small_bytes``: only slots smaller
+        than that threshold are merged (the steady trickle of
+        micro-batch epochs), while already-compacted large slots are
+        left untouched — each run costs O(recent small epochs), not
+        O(table).
 
-        ``max_fold_slots=k`` (r12, VERDICT r11 #2) makes the call ONE
-        bounded size-tiered step instead of an all-smalls fold: slots
-        below ``small_bytes`` are bucketed by geometric size class
-        (tier = ⌊log_k(bytes)⌋ — k similar slots merge into the next
-        tier, LSM-style), and only the OLDEST k slots of the lowest
-        tier holding ≥ k are folded. Per call the pause is one k-slot
-        rewrite (the r11 all-at-once policy stalled the writer thread
-        15–25 s against a 0.76 s p50 append, BENCH_factledger_r11);
-        across calls each byte is rewritten O(log_k n) times, and slot
-        count stays O(k·log_k n). Returns 0 when no tier is full —
-        a cheap pointer-only check (slot sizes are cached at publish
-        time in ``dir_bytes``), safe to run every epoch.
+        ``max_fold_slots=k`` makes the call ONE bounded size-tiered
+        step: slots below ``small_bytes`` are bucketed by geometric
+        size class (tier = ⌊log_k(bytes)⌋ — k similar slots merge into
+        the next tier, LSM-style), and only the OLDEST k slots of the
+        lowest tier holding ≥ k are folded. Each step removes k − 1
+        slots, so repeating it until it returns 0 terminates, and then
+        no tier below ``small_bytes`` holds k slots; across steps each
+        byte is rewritten O(log_k n) times. The "nothing to do" check
+        reads only the pointer (slot sizes are cached at publish time
+        in ``dir_bytes``).
 
-        Locking (r12): the selection and the MERGED WRITE run OUTSIDE
-        the pointer lock — stages are invisible and exempt from orphan
-        GC while live (``_live_stages``) — so a fold's multi-second
-        Spark job never blocks a concurrent epoch append; only the
-        final publish (one rename + one pointer write, milliseconds)
+        Every fold takes the same path: the selection and the MERGED
+        WRITE run OUTSIDE the pointer lock — stages are invisible and
+        exempt from orphan GC while live (``_live_stages``) — so a
+        fold's multi-second Spark job never blocks a concurrent epoch
+        append. Only the commit (one rename plus one pointer write)
         holds the lock, after re-verifying every folded slot is still
-        committed (appends only ADD slots, so the check can only fail
-        if a replace()/another compactor intervened — then the staged
-        output is discarded and the step reports 0). Readers holding
-        the old ledger keep a consistent view until the atomic swap;
-        the epoch/token ledgers are preserved."""
+        committed: appends only ADD slots, so the check fails only if
+        a replace() or another compactor intervened, and then the
+        staged output is discarded and the call returns 0. The folded
+        slots are retired to trash, so readers holding the old pointer
+        finish; the epoch/token ledgers are preserved."""
         if max_fold_slots is not None and max_fold_slots < 2:
             raise ValueError("max_fold_slots must be >= 2")
-        if small_bytes is None and max_fold_slots is None:
-            with self._locked():
-                meta = self._pointer()
-                if len(meta["dirs"]) <= 1:
-                    return 0
-                n = len(meta["dirs"])
-                # mergeSchema: compaction rewrites history, so it must
-                # carry the UNION schema — sampling one pre-evolution
-                # footer would silently destroy later columns for good.
-                self._replace(self.read(spark, merge_schema=True))
-                return n
         meta = self._pointer()  # lock-free snapshot; re-verified below
-        small = self._select_fold(meta, small_bytes, max_fold_slots)
-        if len(small) <= 1:
+        fold = self._select_fold(meta, small_bytes, max_fold_slots)
+        if len(fold) <= 1:
             return 0
-        paths = [os.path.join(self.path, d) for d in small]
-        # mergeSchema for the same reason as the full fold above
+        paths = [os.path.join(self.path, d) for d in fold]
+        # mergeSchema: compaction rewrites history, so it must carry
+        # the UNION schema — sampling one pre-evolution footer would
+        # silently destroy later columns for good.
         reader = spark.read.option("basePath", self.path).option(
             "mergeSchema", "true"
         )
-        in_bytes = sum(self._slot_bytes(meta, d) for d in small)
+        in_bytes = sum(self._slot_bytes(meta, d) for d in fold)
         # COALESCE the fold output: compaction must compact FILES, not
         # just ledger entries. Without this the merged slot inherits
         # one file per (write task × partition) — measured 1300+ files
@@ -695,41 +684,15 @@ class LedgeredFactSink(FactSink):
 
         with self._locked():
             now = self._pointer()
-            if any(d not in now["dirs"] for d in small):
+            if any(d not in now["dirs"] for d in fold):
                 # a replace()/competing compactor removed a source slot
                 # while we staged — the staged output is stale; drop it.
                 if stage is not None:
                     self._live_stages.discard(os.path.basename(stage))
                     shutil.rmtree(stage, ignore_errors=True)
                 return 0
-            seq = now["seq"] + 1
-            dirs = [d for d in now["dirs"] if d not in small]
-            dir_bytes = {
-                d: b for d, b in now["dir_bytes"].items() if d not in small
-            }
-            if stage is not None:
-                slot = self._publish(stage, seq)
-                dirs.append(slot)
-                dir_bytes[slot] = nbytes
-            # retire the folded slots instead of deleting them: a
-            # reader holding the pre-fold pointer may still be
-            # scanning (see trash_retention_s); the same commit sweeps
-            # previously-retired slots whose retention expired.
-            t_retired = time.time()
-            trash, expired = self._swept_trash(now)
-            trash += [{"dir": d, "t": t_retired} for d in small]
-            self._write_pointer(
-                {
-                    **now,
-                    "seq": seq,
-                    "dirs": dirs,
-                    "dir_bytes": dir_bytes,
-                    "trash": trash,
-                }
-            )
-        for d in expired:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        return len(small)
+            self._commit(now, stage, nbytes, retired=fold)
+        return len(fold)
 
     def _merge(self, df: DataFrame) -> DataFrame:
         """How a compaction combines the rows of the slots it folds:

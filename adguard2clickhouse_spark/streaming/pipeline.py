@@ -36,7 +36,7 @@ from __future__ import annotations
 import os
 import re
 import time as _time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +54,21 @@ from adguard2clickhouse_spark.operators.parse import (
 from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink
 from adguard2clickhouse_spark.sinks.summing import SummingParquetSink
 from adguard2clickhouse_spark.sources.querylog import read_querylog_stream
+
+# Operator sizing hint (see ``QuerylogPipeline._maybe_sizing_hint``):
+# the per-epoch fixed cost (see ``start``) makes small epochs
+# overhead-bound, so a running stream whose last _SIZING_HINT_EPOCHS
+# epochs carried a median under _SIZING_HINT_ROWS rows gets ONE warning
+# with the measured rule — the README table for users who never read it.
+_SIZING_HINT_ROWS = 100_000
+_SIZING_HINT_EPOCHS = 10
+
+
+def _add_walls(timings: dict, walls: dict) -> None:
+    """Accumulate one maintenance run's walls and fold counts into
+    ``timings`` (runs are sequential on one thread, so both add)."""
+    for k, v in walls.items():
+        timings[k] = round(timings.get(k, 0) + v, 3)
 
 
 def aggregate_sinks(out_dir: str) -> dict[str, SummingParquetSink]:
@@ -75,8 +90,6 @@ class QuerylogPipeline:
     def __init__(self, spark: SparkSession, source_dir: str, out_dir: str,
                  checkpoint_dir: str | None = None, clickhouse=None,
                  custom_aggregates=None,
-                 parse_parallelism: int | str | None = None,
-                 fused_deltas: bool | str = "auto",
                  fact_sink_factory=None):
         self.spark = spark
         # Micro-batches are small relative to the static shuffle-partition
@@ -135,90 +148,45 @@ class QuerylogPipeline:
         # summing sinks — against a real ClickHouse the server-side MVs
         # fold them from this very insert, exactly like the reference.
         self.clickhouse = clickhouse
-        # Optional round-robin repartition of the RAW LINES below the
-        # parse. Hypothesis (r6): micro-batch partitioning follows the
-        # file count per trigger (2 files = 2 partitions), starving the
-        # UDF/encode/write stages of cores. MEASURED at 1M rows / 10
-        # epochs on a quiet host: OFF 25.4-27.9k rows/s; 32 -> 20.9k;
-        # 8 -> 22.4k — the added per-epoch exchange plus 8 sinks x more
-        # shuffle-map tasks cost MORE than the parallelism buys, and
-        # per-stage attribution shows parse_materialize barely moves
-        # (the leg is dominated by scan + persist + job overhead, not
-        # by per-row CPU). Same lesson as the r5 batch finding: don't
-        # repartition your way out of a cost that isn't per-row CPU.
-        # The knob stays for genuinely CPU-dense parses (real DNS blobs
-        # rather than 5 memoized variants); round-robin repartition is
-        # deterministic across epoch retries (sorts before exchanging),
-        # so ClickHouse dedup tokens stay stable. "auto" =
-        # defaultParallelism; int pins; None/0 (default) disables.
-        if parse_parallelism == "auto":
-            parse_parallelism = spark.sparkContext.defaultParallelism
-        self.parse_parallelism = parse_parallelism or None
-        # Fused grouping-sets delta computation (see process_batch).
-        # "auto" (default) decides PER EPOCH from the batch row count:
-        # same-day A/B pairs at 1M rows (r9) put the crossover between
-        # 100k and 250k rows/epoch — per-sink wins at 100k (57.8s vs
-        # fused 67.7s: the fan is merge+write-bound and the fused job
-        # adds a serial stage), fused wins at 250k (41.8s vs 58.3s)
-        # and 500k (median 24.1s vs 26.9s: eight full-input groupBys
-        # get scan/delta-compute-bound before one grouping-sets pass
-        # does). True/False pin the strategy; the fused plan itself is
-        # driver-gated via a16_fused_mv_union.
-        # The strategy knob accepts bool | "auto" ONLY. Any other string
-        # ("false", "off", a typo like "Auto") must be an error, not a
-        # silent bool(str)=True behavior change (ADVICE r9).
-        if isinstance(fused_deltas, str) and fused_deltas != "auto":
-            raise ValueError(
-                f"fused_deltas must be True, False or 'auto'; got {fused_deltas!r}"
-            )
-        self.fused_deltas = fused_deltas
+        # Fused grouping-sets delta computation (see process_batch),
+        # decided PER EPOCH from the batch row count: same-day A/B
+        # pairs at 1M rows (r9) put the crossover between 100k and
+        # 250k rows/epoch — per-sink wins at 100k (57.8s vs fused
+        # 67.7s: the fan is merge+write-bound and the fused job adds a
+        # serial stage), fused wins at 250k (41.8s vs 58.3s) and 500k
+        # (median 24.1s vs 26.9s: eight full-input groupBys get
+        # scan/delta-compute-bound before one grouping-sets pass does).
+        # The fused plan itself is driver-gated via a16_fused_mv_union.
         self.fused_min_rows = 200_000
-        # Automatic fact-ledger maintenance (VERDICT r10 #1): reads
-        # degrade with committed-slot count (BENCH_factledger_r10.json:
-        # 17 s at 200 tiny slots vs 6.6 s after one compaction), and a
-        # manual compact_facts() nothing schedules is maintenance that
-        # never happens. When the committed-slot count reaches this
-        # threshold, process_batch runs one bounded compaction BETWEEN
-        # epochs — same thread as the appends (foreachBatch serializes
-        # epochs), so it IS the single writer and needs no stream-stop.
-        # Each run folds only slots under compact_small_bytes (the scan
-        # layer's maxPartitionBytes), i.e. the trickle of recent
-        # micro-batch epochs — O(recent epochs), never O(table); slots
-        # that grew past the threshold are never rewritten again, which
-        # bounds write amplification the way tiered compaction does.
-        # 0/None disables. The slot-count check per epoch is one small
-        # JSON read.
-        #
-        # r12 (VERDICT r11 #2): the maintenance is now INCREMENTAL —
-        # each epoch runs at most ONE size-tiered fold of
-        # auto_compact_fanout similar-sized slots (LSM tiering; see
-        # LedgeredFactSink.compact(max_fold_slots=...)), so the
-        # writer-thread pause per epoch is one k-slot rewrite instead
-        # of the r11 all-smalls fold that stalled ingest 15–25 s
-        # against a 0.76 s p50 append (BENCH_factledger_r11.json).
-        # auto_compact_min_slots stays as the BACKSTOP: if the slot
-        # count ever reaches it despite tiering (pathological size
-        # distributions, fanout disabled), the full small fold runs as
-        # before. The summing sinks take the same tiered step: each
-        # epoch appends one part per sink, and a fold merges k parts
-        # into one, folding equal keys (SummingParquetSink.compact).
-        self.auto_compact_min_slots: int | None = 48
+        # Ledger maintenance: every epoch commits one slot per ledgered
+        # sink (log2, the dead-letter channel, each summing sink), and
+        # reads degrade with the committed-slot count
+        # (BENCH_factledger_r10.json: 17 s at 200 tiny slots vs 6.6 s
+        # after one compaction). After each epoch the maintenance
+        # thread folds every sink with size-tiered steps
+        # (``compact(max_fold_slots=auto_compact_fanout)``, LSM
+        # tiering: k similar-sized slots merge into one), repeated
+        # until no tier below compact_small_bytes (the scan layer's
+        # maxPartitionBytes) holds auto_compact_fanout slots. Slots
+        # that grew past that threshold are never rewritten again,
+        # which bounds write amplification; summing sinks fold equal
+        # keys as they merge (SummingParquetSink). A falsy fanout
+        # disables the maintenance.
         self.auto_compact_fanout: int | None = 8
         self.compact_small_bytes = 128 << 20
-        # The incremental folds run on THIS single-thread pool,
-        # overlapped with subsequent epochs (VERDICT r11 #2: the fold
-        # must not sit on the ingest critical path). Safe because the
-        # sink stages the merged output outside the pointer lock and
-        # publishes under it in milliseconds (see LedgeredFactSink.
-        # compact); a fold failure surfaces at the NEXT epoch via
-        # future.result() — that batch fails, Spark retries it, the
-        # appends no-op (epoch ledger) and the fold re-runs: still
-        # exactly-once, one epoch later than the r11 synchronous
-        # surface point.
+        # The folds run on THIS single-thread pool, overlapped with
+        # the following epochs so they never sit on the ingest
+        # critical path. Safe because the sink stages the merged
+        # output outside the pointer lock and commits under it in
+        # milliseconds (see LedgeredFactSink.compact); a fold failure
+        # surfaces at the NEXT epoch via future.result() — that batch
+        # fails, Spark retries it, the appends no-op (epoch ledger)
+        # and the fold re-runs: still exactly-once. At most one run is
+        # in flight and one queued behind it (see process_batch).
         self._maint_pool = ThreadPoolExecutor(
             max_workers=1, thread_name_prefix="ledger-maint"
         )
-        self._maint_future = None
+        self._maint_runs: list = []
         # Streaming-query identity for every sink's epoch ledger
         # (ADVICE r10): resolved lazily from the checkpoint's
         # metadata file (Spark writes it at query init, before the
@@ -229,14 +197,7 @@ class QuerylogPipeline:
         self._query: StreamingQuery | None = None
         # per-epoch stage walls appended by process_batch (see there)
         self.batch_timings: list[dict] = []
-        # Operator sizing hint (r13, VERDICT r12 #5): the per-epoch
-        # fixed cost (see ``start``) makes small epochs overhead-bound.
-        # When a RUNNING stream has processed `sizing_hint_epochs`
-        # epochs whose median rows sit under `sizing_hint_rows`, emit
-        # ONE warning with the measured rule — the README table for
-        # users who never read it. 0/None disables.
-        self.sizing_hint_rows = 100_000
-        self.sizing_hint_epochs = 10
+        # the small-epoch warning, once emitted (see _maybe_sizing_hint)
         self.sizing_hint: str | None = None
 
     def _resolve_stream_identity(self) -> str | None:
@@ -251,11 +212,14 @@ class QuerylogPipeline:
         return self._stream_identity
 
     def _maintenance_step(self) -> dict:
-        """One incremental size-tiered fold step per ledgered channel
-        and per summing sink (see ``auto_compact_fanout`` in
-        ``__init__``), the channels folding concurrently so a step
-        lasts as long as its slowest fold, not the sum of ten. Runs on
-        the maintenance thread; returns the walls to merge into the
+        """Fold every ledgered channel and summing sink with size-tiered
+        steps (see ``auto_compact_fanout`` in ``__init__``), repeating
+        each sink's step until it returns 0: then no tier below
+        ``compact_small_bytes`` holds ``auto_compact_fanout`` slots.
+        Each step that folds removes k − 1 ≥ 1 slots, so the loop ends.
+        The channels fold concurrently, so the maintenance lasts as
+        long as its slowest sink, not the sum of ten. Runs on the
+        maintenance thread; returns the walls to merge into the
         collecting batch's timings (the summing sinks' under
         ``summing_compact_*``: the slowest sink's wall and the parts
         folded over all sinks). The dead-letter channel joins the
@@ -274,14 +238,18 @@ class QuerylogPipeline:
 
         def fold(sink):
             t0 = _time.time()
-            folded = sink.compact(
+            folded = 0
+            while step := sink.compact(
                 self.spark,
                 small_bytes=self.compact_small_bytes,
                 max_fold_slots=self.auto_compact_fanout,
-            )
+            ):
+                folded += step
             return folded, _time.time() - t0
 
-        with ThreadPoolExecutor(max_workers=len(channels)) as pool:
+        with ThreadPoolExecutor(
+            max_workers=len(channels), thread_name_prefix="ledger-maint-fold"
+        ) as pool:
             results = list(pool.map(fold, [sink for _, sink in channels]))
         out: dict = {}
         for (key, _), (folded, wall) in zip(channels, results):
@@ -291,13 +259,17 @@ class QuerylogPipeline:
         return out
 
     def join_maintenance(self) -> dict:
-        """Wait for any in-flight background fold and return its
-        timings (re-raising its failure). Maintenance entry points
-        (replay, manual compaction, the backstop) call this so ledger
+        """Wait for the in-flight and queued maintenance runs and
+        return their timings (re-raising a failure). Maintenance entry
+        points (replay, rebuild, manual compaction) call this so ledger
         surgery never overlaps an in-flight fold; harnesses call it
         after ``awaitTermination`` so slot counts are post-maintenance."""
-        f, self._maint_future = self._maint_future, None
-        return f.result() if f is not None else {}
+        runs, self._maint_runs = self._maint_runs, []
+        wait(runs)
+        out: dict = {}
+        for f in runs:
+            _add_walls(out, f.result())
+        return out
 
     def _require_stream_stopped(self, op: str) -> None:
         """Maintenance that swaps ledgers out from under the stream
@@ -400,21 +372,15 @@ class QuerylogPipeline:
 
             # Delta computation: per-sink groupBys vs ONE fused
             # grouping-sets pass (fused_aggregate_deltas, VERDICT r6
-            # #4), decided per epoch under "auto" (see __init__ for
-            # the measured crossover). Small epochs are bound by the
-            # per-job floor — the fused job only adds a serial stage;
-            # large epochs are delta-compute-bound — eight full
+            # #4), decided per epoch by fused_min_rows (see __init__
+            # for the measured crossover). Small epochs are bound by
+            # the per-job floor — the fused job only adds a serial
+            # stage; large epochs are delta-compute-bound — eight full
             # re-scans of the cached batch cost more than one
             # grouping-sets pass. The fused plan applies only to the
             # stock aggregate set (custom MVs have no extractor).
-            if self.fused_deltas == "auto":
-                use_fused = n_good >= self.fused_min_rows
-            else:
-                # truthy pins fuse (bool(1) counted before the auto
-                # mode existed and must keep counting)
-                use_fused = bool(self.fused_deltas)
             fused = None
-            if use_fused and all(
+            if n_good >= self.fused_min_rows and all(
                 ALL_AGGREGATES.get(name) is fn
                 for name, fn in self.aggregates.items()
             ):
@@ -468,41 +434,29 @@ class QuerylogPipeline:
                     fused.unpersist()
             timings["overlap_section_s"] = round(_time.time() - t, 3)
             good.unpersist()
-            # Automatic fact-ledger maintenance (see __init__): one
-            # incremental fold step at a time, OFF the writer thread
-            # (r12 — the r11 synchronous fold stalled ingest 15-25 s).
-            # The fold stages outside the pointer lock and publishes
-            # in milliseconds under it, so the next epoch's appends
-            # overlap the fold's Spark work and block only on the
-            # brief pointer swap. Calls the sink directly rather than
+            # Ledger maintenance (see __init__), OFF the writer thread:
+            # the folds stage outside the pointer lock and commit in
+            # milliseconds under it, so the next epoch's appends
+            # overlap the folds' Spark work and block only on the
+            # brief pointer swap. Calls the sinks directly rather than
             # the stream-stop-guarded public compact_facts() — the
             # pipeline owns both the stream and the maintenance, so
             # this is the single writing PROCESS by construction.
             if self.auto_compact_fanout:
-                # collect a finished background fold first: its walls
+                # collect finished maintenance runs first: their walls
                 # land in THIS batch's timings, and a failed fold
                 # re-raises here — failing this batch, whose retry
-                # no-ops the appends and re-submits the fold.
-                if self._maint_future is not None and self._maint_future.done():
-                    f, self._maint_future = self._maint_future, None
-                    timings.update(f.result())
-                if self._maint_future is None:
-                    self._maint_future = self._maint_pool.submit(
-                        self._maintenance_step
+                # no-ops the appends and re-submits the maintenance.
+                while self._maint_runs and self._maint_runs[0].done():
+                    _add_walls(timings, self._maint_runs.pop(0).result())
+                # Some run must START after this epoch's commits, so
+                # the fold bound holds once it ends: queue one unless a
+                # run is already queued (not yet started) behind the
+                # one in flight.
+                if all(f.running() or f.done() for f in self._maint_runs):
+                    self._maint_runs.append(
+                        self._maint_pool.submit(self._maintenance_step)
                     )
-            if self.auto_compact_min_slots:
-                n_slots = len(self.log2_sink._pointer()["dirs"])
-                if n_slots >= self.auto_compact_min_slots:
-                    # backstop (expected never to fire while the
-                    # incremental folds keep up): synchronous all-smalls
-                    # fold, joining any in-flight step first
-                    timings.update(self.join_maintenance())
-                    t0 = _time.time()
-                    folded = self.log2_sink.compact(
-                        self.spark, small_bytes=self.compact_small_bytes
-                    )
-                    timings["auto_compact_s"] = round(_time.time() - t0, 3)
-                    timings["auto_compact_folded"] = folded
             # Per-epoch stage wall attribution (driver-side). The
             # consumer stages OVERLAP: their individual walls sum to
             # more than the section wall; `overlap_section_s` is the
@@ -518,28 +472,20 @@ class QuerylogPipeline:
     def _maybe_sizing_hint(self) -> None:
         """Emit the measured micro-batch sizing rule ONCE when the
         stream is persistently running overhead-bound small epochs."""
-        # 0/None on EITHER knob disables: epochs=None would raise
-        # TypeError at rows[-None:] inside the foreachBatch callback
-        # (killing the stream), epochs=0 would median ALL epochs
-        # (ADVICE r13).
-        if (
-            self.sizing_hint is not None
-            or not self.sizing_hint_rows
-            or not self.sizing_hint_epochs
-        ):
+        if self.sizing_hint is not None:
             return
         rows = [
             bt["n_rows"] for bt in self.batch_timings if "n_rows" in bt
         ]
-        if len(rows) < self.sizing_hint_epochs:
+        if len(rows) < _SIZING_HINT_EPOCHS:
             return
         import statistics
 
-        med = statistics.median(rows[-self.sizing_hint_epochs:])
-        if med >= self.sizing_hint_rows:
+        med = statistics.median(rows[-_SIZING_HINT_EPOCHS:])
+        if med >= _SIZING_HINT_ROWS:
             return
         self.sizing_hint = (
-            f"SMALL-EPOCH REGIME: the last {self.sizing_hint_epochs} "
+            f"SMALL-EPOCH REGIME: the last {_SIZING_HINT_EPOCHS} "
             f"micro-batches carried a median of {int(med):,} rows. The "
             "per-epoch fixed cost (about 2.3 s for a 3k-row epoch on a "
             "4-core host: parse materialization plus the job floor of "
@@ -565,7 +511,8 @@ class QuerylogPipeline:
         **Sizing the epoch (measured r9 operating point,
         BENCH_streaming_r9.json):** throughput rises with epoch size —
         25k rows/s at 100k rows/epoch, 42k at 250k, 63k at 500k — and
-        the fused-delta auto engages at the measured ≥200k crossover,
+        the fused delta pass engages at ``fused_min_rows`` (the
+        measured ≥200k crossover),
         so target ≥500k rows per micro-batch for bulk throughput.
         ``max_files_per_trigger`` is the lever when the spooler writes
         fixed-size files (pick ceil(500k / rows-per-file)); leave it
@@ -600,8 +547,6 @@ class QuerylogPipeline:
                 .dropDuplicatesWithinWatermark(["value"])
                 .drop("_ingest_ts")
             )
-        if self.parse_parallelism:
-            raw = raw.repartition(self.parse_parallelism)
         parsed = parse_querylog_lines(raw)
         writer = (
             parsed.writeStream.foreachBatch(self.process_batch)
@@ -688,7 +633,8 @@ class QuerylogPipeline:
         RAISES while this pipeline's stream is active (r11 — the
         "run while stopped" discipline is enforced, not a docstring);
         routine maintenance needs no manual call at all, the pipeline
-        auto-compacts between epochs (``auto_compact_min_slots``)."""
+        folds every ledgered sink on its maintenance thread after each
+        epoch (``auto_compact_fanout``)."""
         self._require_stream_stopped("compact_facts")
         return self.log2_sink.compact(self.spark, small_bytes=small_bytes)
 
@@ -699,9 +645,15 @@ class QuerylogPipeline:
         all require manual INSERT SELECT surgery there; README.md:24-189
         defines them insert-time-only). Here the fact table is the
         source of truth: recompute any aggregate wholesale and swap it
-        in atomically via the sink's ledger pointer. Streaming can
-        keep appending — the next epoch's part lands on the rebuilt
-        base."""
+        in atomically via the sink's ledger pointer.
+
+        RAISES while this pipeline's stream is active: the swap
+        supersedes every committed part, so an epoch committed between
+        the ``read_log2()`` listing and the swap would be discarded
+        while its epoch id stays in the ledger — lost for good. Stop
+        the stream, rebuild, restart; the next epoch's part lands on
+        the rebuilt base."""
+        self._require_stream_stopped("rebuild_aggregates")
         log2 = self.read_log2().persist()
         try:
             for name in names or list(self.aggregates):

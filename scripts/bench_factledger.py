@@ -9,30 +9,31 @@ History of this protocol:
   smalls) — slots bounded <=47 and reads flat, but each fold stalled
   the writer thread 15-25 s against a 0.76 s p50 append: a ~30x
   epoch-latency spike four times per 200 epochs.
-- r12 (this file): the pipeline's per-epoch decision is ONE bounded
-  size-tiered fold step (LSM tiering, fanout k — see
-  LedgeredFactSink.compact(max_fold_slots=...)) run on a BACKGROUND
-  maintenance thread: the fold stages its merged output outside the
-  pointer lock and publishes under it in milliseconds, so the epoch's
-  appends overlap the fold's Spark work. Fold outputs are coalesced
-  (compaction compacts FILES, not just ledger entries — the r11 fold
-  inherited one file per write-task×partition, 1300+ files per merged
-  slot, which is why its higher-tier rewrites took 15-25 s). The
-  48-slot all-smalls fold stays as a synchronous backstop. The
+- r12 (BENCH_factledger_r12.json): after each epoch a BACKGROUND
+  maintenance thread runs bounded size-tiered fold steps (LSM
+  tiering, fanout k — see LedgeredFactSink.compact(max_fold_slots=
+  ...)): a fold stages its merged output outside the pointer lock and
+  commits under it in milliseconds, so the epoch's appends overlap
+  the fold's Spark work. Fold outputs are coalesced (compaction
+  compacts FILES, not just ledger entries — the r11 fold inherited
+  one file per write-task×partition, 1300+ files per merged slot,
+  which is why its higher-tier rewrites took 15-25 s). That run also
+  kept a synchronous 48-slot all-smalls backstop, since removed. The
   done-criterion from VERDICT r11: same 200-epoch worst-case
   protocol, max EPOCH wall (the ingest-visible latency) <= ~3x the
   p50 epoch wall, slots still bounded, reads still flat.
 
-The loop below is QuerylogPipeline.process_batch's r12 decision
-verbatim (collect-finished-fold, submit-if-idle, synchronous
-backstop), driven through the sink directly so the measurement
-isolates ledger maintenance from parse/UDF cost exactly like the r10
-and r11 baselines did. The end-to-end pipeline trigger is pytest-gated
+The loop below is QuerylogPipeline.process_batch's maintenance
+policy (collect finished runs; queue a run unless one is already
+queued; each run repeats the tiered step until it folds nothing),
+driven through the sink directly so the measurement isolates ledger
+maintenance from parse/UDF cost exactly like the r10 and r11
+baselines did. The end-to-end pipeline trigger is pytest-gated
 (tests/test_streaming.py::test_auto_compaction_bounds_committed_slots,
 test_noisy_source_dead_channel_stays_bounded).
 
-Usage: python scripts/bench_factledger.py [epochs] [rows_per_epoch]
-Writes BENCH_factledger_r12.json at the repo root.
+Usage: python scripts/bench_factledger.py [epochs] [rows_per_epoch] [out_json]
+Writes BENCH_factledger_r18.json at the repo root by default.
 """
 
 from __future__ import annotations
@@ -52,7 +53,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from adguard2clickhouse_spark.session import get_spark  # noqa: E402
 from adguard2clickhouse_spark.sinks.facts import LedgeredFactSink  # noqa: E402
 
-AUTO_COMPACT_MIN_SLOTS = 48  # QuerylogPipeline.__init__ backstop
 AUTO_COMPACT_FANOUT = 8  # QuerylogPipeline.__init__ default
 COMPACT_SMALL_BYTES = 128 << 20
 
@@ -60,6 +60,9 @@ COMPACT_SMALL_BYTES = 128 << 20
 def main() -> None:
     epochs = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     rows_per_epoch = int(sys.argv[2]) if len(sys.argv) > 2 else 500
+    out_json = Path(sys.argv[3]) if len(sys.argv) > 3 else (
+        REPO / "BENCH_factledger_r18.json"
+    )
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     tmp = tempfile.mkdtemp(prefix="factledger_r12_")
@@ -91,13 +94,15 @@ def main() -> None:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    def fold_step(epoch: int) -> dict | None:
+    def fold_run(epoch: int) -> dict | None:
         t0 = time.time()
-        folded = sink.compact(
+        folded = 0
+        while step := sink.compact(
             spark,
             small_bytes=COMPACT_SMALL_BYTES,
             max_fold_slots=AUTO_COMPACT_FANOUT,
-        )
+        ):
+            folded += step
         if not folded:
             return None
         return {"epoch": epoch, "folded": folded,
@@ -117,31 +122,21 @@ def main() -> None:
     scratch.read(spark).selectExpr("count(*) c", "max(date_time) m").collect()
 
     pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="maint")
-    future = None
+    runs = []
     epoch_walls, appends, reads, compacts, slot_counts = [], [], [], [], []
-    backstop_fired = 0
     for e in range(epochs):
         t_epoch = time.time()
         sink.append(epoch_df(e), epoch_id=e)
         appends.append(time.time() - t_epoch)
-        # the pipeline's r12 between-epoch maintenance decision,
-        # verbatim: collect a finished background fold, submit the
-        # next step if idle, synchronous backstop at the threshold
-        if future is not None and future.done():
-            res, future = future.result(), None
+        # the pipeline's after-epoch maintenance policy: collect
+        # finished runs, queue one unless a run is already queued
+        while runs and runs[0].done():
+            res = runs.pop(0).result()
             if res:
                 compacts.append(res)
-        if future is None:
-            future = pool.submit(fold_step, e)
+        if all(f.running() or f.done() for f in runs):
+            runs.append(pool.submit(fold_run, e))
         n_slots = len(sink._pointer()["dirs"])
-        if n_slots >= AUTO_COMPACT_MIN_SLOTS:  # backstop (expect: never)
-            backstop_fired += 1
-            res = future.result()
-            future = None
-            if res:
-                compacts.append(res)
-            sink.compact(spark, small_bytes=COMPACT_SMALL_BYTES)
-            n_slots = len(sink._pointer()["dirs"])
         epoch_walls.append(time.time() - t_epoch)
         slot_counts.append(n_slots)
         if (e + 1) % 25 == 0:
@@ -149,8 +144,8 @@ def main() -> None:
                           "read_s": timed_read()})
             print(f"epoch {e + 1}: slots={n_slots} read={reads[-1]['read_s']}s",
                   flush=True)
-    if future is not None:  # drain, as run_available does
-        res = future.result()
+    for f in runs:  # drain, as join_maintenance does
+        res = f.result()
         if res:
             compacts.append(res)
 
@@ -163,8 +158,6 @@ def main() -> None:
         "rows_per_epoch": rows_per_epoch,
         "rows_total": total_rows,
         "auto_compact_fanout": AUTO_COMPACT_FANOUT,
-        "auto_compact_min_slots_backstop": AUTO_COMPACT_MIN_SLOTS,
-        "backstop_fired": backstop_fired,
         "epoch_wall_s_p50": round(p50_epoch, 3),
         "epoch_wall_s_p99": round(
             sorted(epoch_walls)[int(0.99 * (len(epoch_walls) - 1))], 3
@@ -196,11 +189,9 @@ def main() -> None:
             "max_committed_slots": 47,
             "note": "BENCH_factledger_r11.json, same protocol, all-smalls fold at 48 slots",
         },
-        "note": "local[8]; worst-case slot fragmentation; policy = QuerylogPipeline r12 defaults (incremental tiered fold per epoch + 48-slot backstop)",
+        "note": "local[8]; worst-case slot fragmentation; policy = QuerylogPipeline defaults (background tiered folds after each epoch, repeated until no tier is full)",
     }
-    (REPO / "BENCH_factledger_r12.json").write_text(
-        json.dumps(result, indent=1) + "\n"
-    )
+    out_json.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps(result))
 
 

@@ -13,10 +13,11 @@ POSTs, one per executor partition — the async-insert batching analog)
 into ≥10 micro-batches so per-epoch latency and summing-sink rewrite
 behavior are measured, not just one availableNow blob.
 
-Usage: python scripts/bench_streaming.py [n_rows] [n_files] [files_per_trigger]
+Usage: python scripts/bench_streaming.py [n_rows] [n_files] [files_per_trigger] [out_json]
 Defaults: 1_000_000 rows (sf1 volume), 20 files, 2 files/trigger
-→ 10 micro-batches. Writes BENCH_streaming_r7.json at the repo root
-and prints the same JSON on stdout.
+→ 10 micro-batches, BENCH_streaming_r7.json at the repo root. Prints
+the same JSON on stdout. The pipeline runs as in production: the
+fused delta pass engages per epoch at ``fused_min_rows``.
 
 r6 (VERDICT r5 #4): the per-epoch wall is now BROKEN DOWN by stage
 (parse+DNS-UDF materialization, fact append, dead-letter append,
@@ -107,15 +108,8 @@ def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_files = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     files_per_trigger = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    # 4th arg: parse_parallelism ("auto", an int, or 0 to disable)
-    pp_arg = sys.argv[4] if len(sys.argv) > 4 else "auto"
-    parse_parallelism = pp_arg if pp_arg == "auto" else int(pp_arg)
-    # 5th arg: fused grouping-sets deltas (1/0 pins; default "auto",
-    # the pipeline's per-epoch row-count gate) — the A/B knob for the
-    # fan-fusion measurements
-    fused = bool(int(sys.argv[5])) if len(sys.argv) > 5 else "auto"
-    # 6th arg: output artifact path (default keeps the r7 filename)
-    out_json = Path(sys.argv[6]) if len(sys.argv) > 6 else (
+    # 4th arg: output artifact path (default keeps the r7 filename)
+    out_json = Path(sys.argv[4]) if len(sys.argv) > 4 else (
         Path(__file__).resolve().parent.parent / "BENCH_streaming_r7.json"
     )
 
@@ -147,9 +141,7 @@ def main() -> None:
     (warm_src / "w.jsonl").write_text("\n".join(make_lines(500)) + "\n")
     QuerylogPipeline(spark, str(warm_src), str(warm_out)).run_available()
 
-    pipe = QuerylogPipeline(spark, str(src), str(out), clickhouse=writer,
-                            parse_parallelism=parse_parallelism,
-                            fused_deltas=fused)
+    pipe = QuerylogPipeline(spark, str(src), str(out), clickhouse=writer)
     pipe.batch_timings.clear()
     t0 = time.time()
     q = pipe.start(available_now=True, max_files_per_trigger=files_per_trigger)
@@ -236,8 +228,7 @@ def main() -> None:
         # at ~1000 rows/s. Recorded here so the artifact carries its
         # own comparison, not a pointer.
         "reference_ceiling_rows_per_s": 1000,
-        "fused_deltas": fused,
-        "parse_parallelism": parse_parallelism,
+        "fused_min_rows": pipe.fused_min_rows,
     }
     out_json.write_text(json.dumps(result, indent=1) + "\n")
     print(json.dumps(result))

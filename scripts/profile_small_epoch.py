@@ -6,8 +6,8 @@ from 100k to 500k rows/epoch — small epochs are overhead-bound, with
 the aggregate fan holding ~74% of the wall at 100k. Two candidate
 levers, both MEASURED here rather than reasoned about:
 
-1. The fused grouping-sets delta pass (``fused_deltas``). Its
-   crossover (fused_min_rows=200_000) was frozen from r9 A/B pairs
+1. The fused grouping-sets delta pass. Its crossover
+   (``fused_min_rows=200_000``) was frozen from r9 A/B pairs
    measured BEFORE the codegen class-cache fix — and the fix moved
    streaming throughput +22-53%, so the per-sink-vs-fused trade may
    have shifted: the fused plan compiles ONE grouping-sets job where
@@ -53,9 +53,9 @@ from adguard2clickhouse_spark.streaming.pipeline import (  # noqa: E402
 def run_once(spark, src, writer, fpt, n_rows, fused) -> dict:
     out = tempfile.mkdtemp(prefix=f"sepoch_fpt{fpt}_{fused}_")
     try:
-        pipe = QuerylogPipeline(
-            spark, src, out, clickhouse=writer, fused_deltas=fused
-        )
+        pipe = QuerylogPipeline(spark, src, out, clickhouse=writer)
+        # pin the strategy: 0 fuses every epoch, n_rows + 1 none
+        pipe.fused_min_rows = 0 if fused else n_rows + 1
         pipe.batch_timings.clear()
         t0 = time.time()
         q = pipe.start(available_now=True, max_files_per_trigger=fpt)

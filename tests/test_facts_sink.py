@@ -594,18 +594,24 @@ def test_replace_generation_bumps_only_when_asked(sink, spark):
     assert sink.generation() == 1
 
 
-def test_reader_holding_prefold_snapshot_survives_fold(sink, spark):
-    """r12 trash retention: a fold COMMITS atomically but must not
-    delete the superseded slots while a reader that listed the old
-    pointer is still scanning — the exact FileNotFoundException race
-    observed the moment folds moved off the writer thread. The folded
-    slots stay on disk for trash_retention_s and later commits sweep
-    them."""
+@pytest.mark.parametrize("supersede", ["tiered_fold", "full_fold", "replace"])
+def test_reader_holding_prefold_snapshot_survives_fold(sink, spark, supersede):
+    """Trash retention: a fold or replace() COMMITS atomically but must
+    not delete the superseded slots while a reader that listed the old
+    pointer is still scanning — the FileNotFoundException race observed
+    the moment folds moved off the writer thread. Every write retires
+    the slots it supersedes the same way: they stay on disk for
+    trash_retention_s and later commits sweep them."""
     df = _df(spark, [("2024-01-01", i, f"d{i}.com") for i in range(5)])
     for e in range(4):
         sink.append(df, epoch_id=e)
     reader = sink.read(spark)  # plan holds the PRE-fold file listing
-    assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 4
+    if supersede == "tiered_fold":
+        assert sink.compact(spark, small_bytes=1 << 30, max_fold_slots=4) == 4
+    elif supersede == "full_fold":
+        assert sink.compact(spark) == 4
+    else:
+        sink.replace(sink.read(spark))
     # the old listing still resolves: retired slots are in trash
     assert reader.count() == 20
     meta = sink._pointer()
